@@ -30,12 +30,16 @@ object ColumnContracts {
 
   val UsersUpdateColumns: Seq[String] = Seq("name", "email", "role", "avatar_url")
 
-  /** convo_analysis: note contact_num/payment excluded (see scaladoc). */
+  /** convo_analysis: note contact_num/payment excluded (see scaladoc).
+    * `is_serviceable` is the reference's `viable`: the flag
+    * `GeocodeJoin.tagViable` writes, so a re-analysed ticket whose
+    * corrected location changes its serviceability updates it.
+    */
   val ConvoUpdateColumns: Seq[String] = Seq(
     "service_category", "summary", "intent_rating", "engagement_rating",
     "clarity_rating", "resolution_rating", "sentiment_rating", "location",
     "schedule_date", "schedule_time", "car", "inspection", "quotation",
-    "tokens", "date_extracted", "address", "viable", "model")
+    "tokens", "date_extracted", "address", "is_serviceable", "model")
 
   val ConvoAllColumns: Seq[String] = "ticket_id" +: ConvoUpdateColumns
 

@@ -147,6 +147,8 @@ object Serve {
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
       .config("spark.sql.session.timeZone", "UTC")
+      // processConvos plans through TopKPerProbe, which these register
+      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")

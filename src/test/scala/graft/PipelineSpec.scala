@@ -7,6 +7,19 @@ import graft.operators.Warehouse
 import graft.pipeline.{MessageEnrich, Pipelines}
 import graft.sources._
 
+/** Mock extraction whose location is the conversation's last
+  * `Address: …` line, so a later message correcting the address wins.
+  */
+private final class LastAddressLlm extends LlmGateway {
+  private val mock = new MockLlmGateway
+  override def extract(conversation: String): graft.llm.LlmResult = {
+    val r = mock.extract(conversation)
+    val loc = "Address: ([a-z ]+)".r.findAllMatchIn(conversation)
+      .map(_.group(1).trim).toSeq.lastOption.getOrElse("")
+    r.copy(fields = r.fields.updated("location", loc))
+  }
+}
+
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -354,6 +367,31 @@ class PipelineSpec extends AnyFunSuite {
     (1 to 4).foreach { _ => rl.acquire(); rl.release() }
     val elapsedMs = (System.nanoTime() - t0) / 1e6
     assert(elapsedMs >= 85) // 4 launches, 30ms spacing → ≥ 90ms ideal (slack for timer)
+  }
+
+  test("convo re-analysis: a corrected address flips the serviceability flag") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-svc").toString
+    val wh = new Warehouse(spark, dir)
+    val p = new Pipelines(spark, wh, fixtureApi, new LastAddressLlm)
+    val ref = Seq("quezon city", "cebu city").toDF("ref_name")
+    val svc = Seq("quezon city").toDF("svc_name")
+    def msgs(rows: (String, String, String)*) = rows.toDF("ticket_id", "message", "datecreated")
+      .withColumn("sender_type", lit("client"))
+      .withColumn("datecreated", to_timestamp(col("datecreated")))
+    def run(m: org.apache.spark.sql.DataFrame) =
+      p.processConvos(m, ref, "ref_name", svc, "svc_name",
+        updateCols = graft.pipeline.ColumnContracts.ConvoUpdateColumns)
+    def flags = wh.read("convo_analysis").orderBy("ticket_id")
+      .select("ticket_id", "location", "is_serviceable").as[(String, String, String)]
+      .collect().toSeq
+
+    val first = Seq(("T1", "Address: quezon city", "2024-01-01 10:00:00"),
+      ("T2", "Address: quezon city", "2024-01-01 11:00:00"))
+    run(msgs(first: _*))
+    assert(flags == Seq(("T1", "quezon city", "Yes"), ("T2", "quezon city", "Yes")))
+    // second run: T1's customer corrects the address to an unserviced city
+    run(msgs(first.take(1) :+ (("T1", "Address: cebu city", "2024-01-02 09:00:00")): _*))
+    assert(flags == Seq(("T1", "cebu city", "No"), ("T2", "quezon city", "Yes")))
   }
 
   test("convo MERGE asymmetry: contact_num/payment staged but never updated") {

@@ -23,13 +23,9 @@ class PlanAuditSpec extends AnyFunSuite {
     p.toString
   }
 
-  /** KEY-shuffle count: hash exchanges minus the test-env spread
-    * (Tables.spread hash-distributes single-row-group scans on a
-    * deterministic `xxhash64(id)` key — scaffolding, not query shape).
-    */
+  /** KEY-shuffle count: the hash exchanges of the plan. */
   private def keyShuffles(plan: String): Int =
-    "Exchange hashpartitioning".r.findAllIn(plan).size -
-      "Exchange hashpartitioning\\(xxhash64".r.findAllIn(plan).size
+    "Exchange hashpartitioning".r.findAllIn(plan).size
 
   private def scansOf(name: String): Seq[FileSourceScanExec] = {
     val df = SparkEntry.queries(name)(spark, dir)
@@ -55,9 +51,8 @@ class PlanAuditSpec extends AnyFunSuite {
     val li = scans.find(_.tableIdentifier.isEmpty).getOrElse(scans.head)
     assert(li.metadata("PushedFilters").contains("LessThanOrEqual(l_shipdate"),
       s"no pushed shipdate filter: ${li.metadata("PushedFilters")}")
-    // projection pruning: only the 6 referenced columns are read (plus,
-    // in the test env, the l_orderkey spread key — see Tables.spread)
-    assert(li.requiredSchema.fieldNames.toSet.subsetOf(Set("l_orderkey",
+    // projection pruning: only the referenced columns are read
+    assert(li.requiredSchema.fieldNames.toSet.subsetOf(Set(
       "l_quantity", "l_extendedprice", "l_discount", "l_tax",
       "l_returnflag", "l_linestatus", "l_shipdate")),
       s"scan reads too many columns: ${li.requiredSchema.fieldNames.mkString(",")}")
@@ -375,8 +370,8 @@ class PlanAuditSpec extends AnyFunSuite {
     assert(!plan.contains("Window"),
       s"bucketing degenerated to a window:\n${plan.take(600)}")
     // ONE key shuffle (the bucket aggregate); the only other exchanges
-    // are the final ORDER BY range partition, the test-env spread,
-    // and the broadcast of the 1-row bounds
+    // are the final ORDER BY range partition and the broadcast of the
+    // 1-row bounds
     val nKey = keyShuffles(plan)
     assert(nKey == 1,
       s"expected exactly one key shuffle, saw $nKey:\n${plan.take(800)}")
@@ -599,11 +594,10 @@ class PlanAuditSpec extends AnyFunSuite {
   }
 
   test("drift queries: narrow scans — TV reads (ts, event_type), KS reads (event_id, value)") {
-    // event_id admitted as the test-env spread key (Tables.spread)
     val tvScans = scansOf("drift_tv_weekly")
     assert(tvScans.nonEmpty && tvScans.forall(
       _.requiredSchema.fieldNames.toSet.subsetOf(
-        Set("event_id", "ts", "event_type"))),
+        Set("ts", "event_type"))),
       s"tv scan reads ${tvScans.map(_.requiredSchema.fieldNames.mkString(",")).mkString(";")}")
     val ksScans = scansOf("drift_ks_value")
     assert(ksScans.nonEmpty && ksScans.forall(
@@ -622,11 +616,10 @@ class PlanAuditSpec extends AnyFunSuite {
     val plan = planOf("drift_source_lang_tv")
     assert(!plan.contains("SortMergeJoin"),
       s"grid joins must broadcast, not shuffle:\n${plan.take(800)}")
-    // doc_id admitted as the test-env spread key (Tables.spread)
     val scans = scansOf("drift_source_lang_tv")
     assert(scans.nonEmpty && scans.forall(
       _.requiredSchema.fieldNames.toSet.subsetOf(
-        Set("doc_id", "source", "lang"))),
+        Set("source", "lang"))),
       s"scan reads ${scans.map(_.requiredSchema.fieldNames.mkString(",")).mkString(";")}")
   }
 
