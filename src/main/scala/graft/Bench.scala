@@ -210,15 +210,16 @@ object Bench {
       s""""errors":${errors.map("\"" + _ + "\"").mkString("[", ",", "]")},""" +
       s""""queries":${jsonOf(queries)}$isoJson$extra,"sf":"$sfDir"}"""
 
-    // Emit one phase: rewrite bench_full.json (full per-query map + load
-    // fingerprint) and print the short headline summary line. Full
+    // The one artifact writer: rewrite bench_full.json (full per-query map
+    // + load fingerprint) and return the short headline summary line. Full
     // per-query timings go to the file only: the bench driver keeps the
     // last ~2000 chars of output, so the stdout line must stay short
     // (~80 queries at full precision overflowed the window in r01/r02 and
     // the driver recorded "parsed": null) — the fresh-JVM map and the
     // load fingerprint live ONLY in the file for the same reason.
-    def emit(stage: String, isolated: Seq[(String, Double)],
-             fresh: Seq[(String, Double)], extraJson: String = ""): Unit = {
+    def writeArtifact(stage: String, isolated: Seq[(String, Double)],
+                      fresh: Seq[(String, Double)],
+                      extraJson: String = ""): String = {
       val (n, results, errors, total) = summarize()
       val isoJson =
         if (isolated.isEmpty) "" else s""","isolated":${jsonOf(isolated)}"""
@@ -251,8 +252,13 @@ object Bench {
             .getBytes("UTF-8"))
       val shown =
         if (only.nonEmpty) results else results.filter(r => headline(r._1))
-      println(line(n, results.size, total, errors, shown, shown.size, stage,
-        isoJson))
+      line(n, results.size, total, errors, shown, shown.size, stage, isoJson)
+    }
+
+    // Emit one phase: write the artifact and print its summary line.
+    def emit(stage: String, isolated: Seq[(String, Double)],
+             fresh: Seq[(String, Double)], extraJson: String = ""): Unit = {
+      println(writeArtifact(stage, isolated, fresh, extraJson))
       System.out.flush()
     }
 
@@ -295,7 +301,7 @@ object Bench {
     }
     val truncated = passesRun < runs
     if (truncated) emit(s"pass$passesRun-only", Seq.empty, Seq.empty)
-    val (_, results, errors, total) = summarize()
+    val (_, results, _, _) = summarize()
 
     // --- self-adjudication: any query reading > 1.5x its BASELINE.md
     // figure gets an immediate ISOLATED re-run (best of 2, nothing else
@@ -518,32 +524,7 @@ object Bench {
     // FINAL artifact + summary. Silence executor/shutdown logging, stop,
     // THEN print: the final line must be the last thing on stdout before
     // sbt's own success line.
-    if (only.isEmpty)
-      java.nio.file.Files.write(
-        java.nio.file.Paths.get("bench_full.json"),
-        (line(allNames.size, results.size, total, errors, results,
-          results.size, "final",
-          (if (isolated.isEmpty) ""
-           else s""","isolated":${jsonOf(isolated)}"""),
-          (if (fresh.isEmpty) "" else s""","fresh":${jsonOf(fresh)}""") +
-          (if (frontSamples.isEmpty) ""
-           else s""","front_build":${jsonOf(frontSamples)}""") +
-          (if (passSamples.isEmpty) ""
-           else passSamples.map(jsonOf)
-             .mkString(""","passes":[""", ",", "]")) + isoLoadJson +
-          s""","load":{"loadavg_start":[${loadStart.mkString(",")}],""" +
-          s""""loadavg_end":[${(if (fullRun) loadavg() else Nil).mkString(",")}],""" +
-          s""""spin_start_sec":$spinStart,""" +
-          s""""spin_end_sec":${if (fullRun) spinSeconds() else 0.0},""" +
-          s""""spin_mt_start_sec":$spinMtStart,""" +
-          s""""spin_mt_end_sec":${if (fullRun) spinParallelSeconds(cpusN) else 0.0},""" +
-          s""""elapsed_sec":${r3(elapsedS)},"cpus":$cpus}""") + "\n")
-          .getBytes("UTF-8"))
-    val shown =
-      if (only.nonEmpty) results else results.filter(r => headline(r._1))
-    val summary = line(allNames.size, results.size, total, errors, shown,
-      shown.size, "final",
-      if (isolated.isEmpty) "" else s""","isolated":${jsonOf(isolated)}""")
+    val summary = writeArtifact("final", isolated, fresh, isoLoadJson)
     try { spark.sparkContext.setLogLevel("OFF"); spark.stop() }
     catch { case _: Throwable => }
     println(summary)

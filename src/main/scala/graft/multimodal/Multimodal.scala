@@ -18,10 +18,10 @@ import org.apache.spark.sql.types._
   * [[sampleVideoFrames]] on top). In all three, a payload the JDK codec
   * cannot parse falls back to the deterministic byte-hash stub with a
   * `decoded=false` flag, so a mixed or corrupt batch degrades row-wise
-  * instead of failing the task; MP4/WebM etc. take that degrade path
-  * until a JNI/FFmpeg decoder replaces the two leaf functions — the
-  * schema contract, size-aware repartitioning, and mapPartitions batch
-  * shape do not change.
+  * instead of failing the task; MP4/WebM pixels, FLAC audio and WebP
+  * images take that degrade path until a JNI/FFmpeg decoder replaces the
+  * leaf functions — the schema contract, size-aware repartitioning, and
+  * mapPartitions batch shape do not change.
   *
   * Scale design: media rows are heavily skewed by payload size, so the
   * partitioner is byte-budget-based (`repartitionByBytes`), not row-count
@@ -80,16 +80,13 @@ object Multimodal {
   }
 
   /** Real image decode: ImageIO parse (PNG/JPEG/GIF/BMP — the JDK
-    * codecs) or, for lossy WebP, the in-engine VP8 keyframe decoder —
-    * + [[FeatureDim]]-dim feature vector of 4×4-grid luminance means
-    * (row-major; partial edge cells use their true pixel counts). None
-    * when the payload isn't a decodable image.
+    * codecs) + [[FeatureDim]]-dim feature vector of 4×4-grid luminance
+    * means (row-major; partial edge cells use their true pixel counts).
+    * None when the payload isn't a decodable image — WebP included, which
+    * the JDK has no codec for.
     */
   def decodeImage(payload: Array[Byte]): Option[(Int, Int, Array[Float])] = {
     if (payload == null || payload.isEmpty) return None
-    Vp8.decodeWebP(payload).foreach { case (w, h, luma) =>
-      return Some((w, h, lumaGrid(luma, w, h)))
-    }
     val img =
       try javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(payload))
       catch { case _: Exception => null }
@@ -102,32 +99,7 @@ object Multimodal {
     * path (4×4 = [[FeatureDim]]), the per-frame video path, and the 8×8
     * (64-cell) perceptual-hash path.
     */
-  /** [[luminanceGrid]] over a raw 8-bit luma plane (row-major w×h) — the
-    * H.264 path's form: Y′ samples are already luminance, no color-model
-    * round trip.
-    */
-  private[multimodal] def lumaGrid(luma: Array[Byte], w: Int, h: Int,
-                                   grid: Int = 4): Array[Float] = {
-    val cells = grid * grid
-    val sums = new Array[Double](cells)
-    val counts = new Array[Long](cells)
-    var y = 0
-    while (y < h) {
-      var x = 0
-      while (x < w) {
-        val cell = math.min(grid - 1, y * grid / h) * grid +
-          math.min(grid - 1, x * grid / w)
-        sums(cell) += (luma(y * w + x) & 0xFF)
-        counts(cell) += 1
-        x += 1
-      }
-      y += 1
-    }
-    Array.tabulate(cells)(i =>
-      if (counts(i) == 0) 0f else (sums(i) / counts(i)).toFloat)
-  }
-
-  private[multimodal] def luminanceGrid(img: java.awt.image.BufferedImage,
+  private def luminanceGrid(img: java.awt.image.BufferedImage,
                             grid: Int = 4): Array[Float] = {
     val (w, h) = (img.getWidth, img.getHeight)
     val cells = grid * grid
@@ -174,38 +146,15 @@ object Multimodal {
       .toDF("media_id", "width", "height", "features", "decoded", "n_bytes")
   }
 
-  /** Real audio decode: FLAC through [[Flac]] (compressed codec, decode
-    * MD5/CRC-verified against the encoder's own signature), everything
-    * else through `javax.sound.sampled` (JDK-native WAV/PCM — AIFF/AU
-    * too): stream → PCM → ([[FeatureDim]] windows of mean |amplitude|,
-    * channel-averaged and normalized to [0,1], time-ordered — the 1-D
-    * analog of the image path's luminance grid), plus the clip duration
-    * in ms. None when the payload isn't decodable audio.
+  /** Real audio decode through `javax.sound.sampled` (JDK-native
+    * WAV/PCM — AIFF/AU too): stream → PCM → ([[FeatureDim]] windows of
+    * mean |amplitude|, channel-averaged and normalized to [0,1],
+    * time-ordered — the 1-D analog of the image path's luminance grid),
+    * plus the clip duration in ms. None when the payload isn't audio the
+    * JDK can open — FLAC included.
     */
   def decodeAudio(payload: Array[Byte]): Option[(Long, Array[Float])] = {
     if (payload == null || payload.isEmpty) return None
-    if (payload.length >= 4 && payload(0) == 'f' && payload(1) == 'L' &&
-      payload(2) == 'a' && payload(3) == 'C') {
-      return Flac.decode(payload).map { case (si, chans) =>
-        val n = chans(0).length
-        val durationMs = math.round(n * 1000.0 / si.sampleRate)
-        val norm = math.pow(2.0, si.bps - 1)
-        val sums = new Array[Double](FeatureDim)
-        val counts = new Array[Long](FeatureDim)
-        var i = 0
-        while (i < n) {
-          var c = 0
-          var acc = 0.0
-          while (c < si.channels) { acc += math.abs(chans(c)(i).toDouble); c += 1 }
-          val cell = math.min(FeatureDim - 1, i.toLong * FeatureDim / n).toInt
-          sums(cell) += acc / si.channels / norm
-          counts(cell) += 1
-          i += 1
-        }
-        (durationMs, Array.tabulate(FeatureDim)(d =>
-          if (counts(d) == 0) 0f else (sums(d) / counts(d)).toFloat))
-      }
-    }
     import javax.sound.sampled.{AudioFormat, AudioSystem}
     try {
       val ais = AudioSystem.getAudioInputStream(
@@ -379,20 +328,21 @@ object Multimodal {
   val ZeroDelayFrameMs = 100L
 
   /** Real video container index — METADATA ONLY, no pixel decode: frame
-    * start timestamps (ms) and total duration. Two container families:
+    * start timestamps (ms) and total duration. Three container families:
     *
     *  - animated GIF (the one multi-frame container the JDK ships a
     *    codec for): per-frame delay from the GraphicControlExtension
     *    `delayTime` (units of 10 ms; 0 → [[ZeroDelayFrameMs]]);
     *  - ISO BMFF (MP4/MOV): real frame timing parsed from the container
     *    boxes (`moov/trak/mdia/{mdhd,hdlr,minf/stbl/{stts,stco}}`) — see
-    *    [[mp4FrameIndex]]. Pixels decode through [[H264]] for
-    *    I_PCM-coded slices (round 12); entropy-coded residual slices
-    *    keep the honest degrade — [[decodeVideoFrame]] returns None for
-    *    those, so downstream rows carry real `frame_ms`/duration with
-    *    `decoded=false` features.
+    *    [[mp4FrameIndex]];
+    *  - Matroska/WebM: frame timing from the EBML cluster/block
+    *    structure — see [[webmFrameIndex]].
     *
-    * None when the payload is neither.
+    * MP4 and WebM pixels have no decoder: [[decodeVideoFrame]] returns
+    * None for them, so downstream rows carry real `frame_ms`/duration
+    * with `decoded=false` features. None when the payload is none of the
+    * three.
     */
   def videoFrameIndex(payload: Array[Byte]): Option[(Long, Array[Long])] =
     gifFrameIndex(payload).orElse(
@@ -512,7 +462,7 @@ object Multimodal {
     * payloadEnd). Handles 32-bit sizes, 64-bit largesize (size == 1), and
     * to-end-of-file (size == 0); stops at the first malformed header.
     */
-  private[multimodal] def boxChildren(b: Array[Byte], start: Int, end: Int): Seq[(String, Int, Int)] = {
+  private def boxChildren(b: Array[Byte], start: Int, end: Int): Seq[(String, Int, Int)] = {
     val out = Seq.newBuilder[(String, Int, Int)]
     var off = start
     var continue = true
@@ -547,9 +497,8 @@ object Multimodal {
     *  - clusters: the Cluster count — the seek granularity a real frame
     *    extractor would use.
     *
-    * Metadata here; pixels decode through [[Vp8]] for VP8 keyframes
-    * within its documented scope (other codecs / inter frames keep the
-    * honest degrade). Malformed EBML → None, never a throw; frame count capped
+    * Metadata only — no pixel decode. Malformed EBML → None, never a
+    * throw; frame count capped
     * against hostile headers. Accepts the `webm` and `matroska` DocTypes.
     * Streamed (MediaRecorder-style) files with unknown-size Segments /
     * Clusters are handled — an unknown-size Cluster ends at the next
@@ -643,80 +592,6 @@ object Multimodal {
       val durMs = durUnits.map(d => (d * scaleNs / 1e6).toLong)
         .getOrElse(maxTs * scaleNs / 1000000L)
       Some((durMs, arr, clusters))
-    } catch { case _: Exception => None }
-  }
-
-  /** Byte spans of the first video track's frames, for pixel decode
-    * ([[Vp8.decodeFrame]]): (CodecID, one (start, length) per frame).
-    * Frames are counted EXACTLY like [[webmFrameIndex]] — document
-    * order, laced blocks contribute one entry per lace frame — so an
-    * index into [[webmFrameIndex]]'s starts addresses the same frame
-    * here. Laced entries carry (-1, -1): the pixel path degrades on them
-    * (VP8 keyframes are not laced in practice) while keeping the index
-    * alignment. CodecID (0x86) defaults to "" when the TrackEntry omits
-    * it.
-    */
-  private[multimodal] def webmFrameBytes(
-      payload: Array[Byte]): Option[(String, Array[(Int, Int)])] = {
-    if (payload == null || payload.length < 8) return None
-    try {
-      val top = ebmlChildren(payload, 0, payload.length)
-      val hdr = top.find(_._1 == 0x1A45DFA3L).getOrElse(return None)
-      val doc = ebmlChildren(payload, hdr._2, hdr._3).find(_._1 == 0x4282L)
-        .map(e => new String(payload, e._2, e._3 - e._2,
-          java.nio.charset.StandardCharsets.ISO_8859_1))
-      if (!doc.forall(d => d == "webm" || d == "matroska")) return None
-      val seg = top.find(_._1 == 0x18538067L).getOrElse(return None)
-      val segKids = ebmlChildren(payload, seg._2, seg._3)
-      // first video TrackEntry: TrackNumber + CodecID (0x86)
-      val (videoTrack, codec) = segKids.find(_._1 == 0x1654AE6BL).flatMap { tracks =>
-        ebmlChildren(payload, tracks._2, tracks._3)
-          .filter(_._1 == 0xAEL)
-          .flatMap { te =>
-            val kids = ebmlChildren(payload, te._2, te._3)
-            val typ = kids.find(_._1 == 0x83L).map(k => ebmlUInt(payload, k._2, k._3))
-            val num = kids.find(_._1 == 0xD7L).map(k => ebmlUInt(payload, k._2, k._3))
-            val cid = kids.find(_._1 == 0x86L).map(k =>
-              new String(payload, k._2, k._3 - k._2,
-                java.nio.charset.StandardCharsets.ISO_8859_1)).getOrElse("")
-            if (typ.contains(1L)) num.map(n => (n, cid)) else None
-          }.headOption
-      }.getOrElse(return None)
-      val spans = Array.newBuilder[(Int, Int)]
-      val MaxFrames = 1 << 22
-      var nFrames = 0L
-      segKids.filter(_._1 == 0x1F43B675L).foreach { cl =>
-        ebmlChildren(payload, cl._2, cl._3).foreach {
-          case (id, s, e) if id == 0xA3L || id == 0xA0L =>
-            val (bs, bEnd) =
-              if (id == 0xA0L)
-                ebmlChildren(payload, s, e).find(_._1 == 0xA1L)
-                  .map(b => (b._2, b._3)).getOrElse((-1, -1))
-              else (s, e)
-            if (bs >= 0) {
-              val (trk, vlen) = ebmlVint(payload, bs)
-              if (vlen > 0 && trk == videoTrack && bs + vlen + 3 <= bEnd) {
-                val flags = payload(bs + vlen + 2) & 0xFF
-                val laceFrames =
-                  if ((flags & 0x06) != 0 && bs + vlen + 3 < bEnd)
-                    (payload(bs + vlen + 3) & 0xFF) + 1
-                  else 1
-                nFrames += laceFrames
-                if (nFrames > MaxFrames) return None
-                if (laceFrames == 1) {
-                  val fs = bs + vlen + 3
-                  spans += ((fs, bEnd - fs))
-                } else {
-                  var f = 0
-                  while (f < laceFrames) { spans += ((-1, -1)); f += 1 }
-                }
-              }
-            }
-          case _ => ()
-        }
-      }
-      val arr = spans.result()
-      if (arr.isEmpty) None else Some((codec, arr))
     } catch { case _: Exception => None }
   }
 
@@ -845,11 +720,11 @@ object Multimodal {
     case _ => 0.0
   }
 
-  private[multimodal] def be32u(b: Array[Byte], i: Int): Long =
+  private def be32u(b: Array[Byte], i: Int): Long =
     ((b(i) & 0xFFL) << 24) | ((b(i + 1) & 0xFFL) << 16) |
       ((b(i + 2) & 0xFFL) << 8) | (b(i + 3) & 0xFFL)
 
-  private[multimodal] def be64(b: Array[Byte], i: Int): Long = {
+  private def be64(b: Array[Byte], i: Int): Long = {
     var v = 0L
     var k = 0
     while (k < 8) { v = (v << 8) | (b(i + k) & 0xFFL); k += 1 }
@@ -868,39 +743,17 @@ object Multimodal {
     if (delay <= 0) ZeroDelayFrameMs else delay
   }
 
-  /** Real per-frame video decode: frame `idx`'s raster → geometry +
+  /** Real per-frame video decode: GIF frame `idx`'s raster → geometry +
     * [[FeatureDim]] luminance-grid features (same grid as the image
-    * path). Three real-pixel families:
+    * path). Each frame decodes as its own raster (no disposal
+    * compositing — features describe the frame's pixels, which is what a
+    * sampling pipeline wants).
     *
-    *  - GIF frames decode as their own raster (no disposal compositing —
-    *    features describe the frame's pixels, which is what a sampling
-    *    pipeline wants);
-    *  - MP4/H.264 frames decode through [[H264]]: full MP4 sample demux +
-    *    NAL/SPS/PPS/slice-header parsing, pixel reconstruction for the
-    *    CAVLC intra layer (I_PCM, Intra_16x16, Intra_4x4 — real baseline
-    *    keyframe coding); CABAC/field/multi-slice streams return None and
-    *    keep the honest `decoded=false` degrade (see [[H264]]'s scope
-    *    note);
-    *  - WebM/VP8 keyframes decode through [[Vp8]]: boolean decoder,
-    *    keyframe header + mode + token parse, dequant, inverse WHT/DCT,
-    *    DC/V/H/TM intra prediction, and the §15 loop filter; inter
-    *    frames and B_PRED macroblocks return None (see [[Vp8]]'s scope
-    *    note).
-    *
-    * None when the payload is neither, the index is out of range, or the
-    * pixels can't be reconstructed.
+    * None when the payload is not a GIF (MP4/WebM included), the index is
+    * out of range, or the pixels can't be reconstructed.
     */
   def decodeVideoFrame(payload: Array[Byte], idx: Int): Option[(Int, Int, Array[Float])] = {
     if (payload == null || payload.isEmpty || idx < 0) return None
-    // grid means straight off the luma plane (Y' IS the luminance the
-    // grid wants; routing through a TYPE_BYTE_GRAY BufferedImage would
-    // apply a linear-gray → sRGB conversion in getRGB and distort values)
-    H264.decodeFrame(payload, idx).foreach { case (w, h, luma) =>
-      return Some((w, h, lumaGrid(luma, w, h)))
-    }
-    Vp8.decodeFrame(payload, idx).foreach { case (w, h, luma) =>
-      return Some((w, h, lumaGrid(luma, w, h)))
-    }
     try {
       val iis = javax.imageio.ImageIO.createImageInputStream(
         new java.io.ByteArrayInputStream(payload))
@@ -943,29 +796,9 @@ object Multimodal {
                 while (d < FeatureDim) { acc(d) += f(d); d += 1 }
                 decodedFrames += 1
               }
-              // demux ONCE per payload, then per-frame pixel decode off
-              // the parsed index — decodeVideoFrame(p, i) in a loop
-              // would re-walk the container per frame (O(frames²) demux
-              // on long videos). Same decode order as decodeVideoFrame:
-              // H.264, then VP8, then GIF.
-              H264.frameDecoder(p) match {
-                case Some((_, dec)) =>
-                  var i = 0
-                  while (i < starts.length) {
-                    dec(i).foreach { case (w, h, l) => add(lumaGrid(l, w, h)) }
-                    i += 1
-                  }
-                case None => Vp8.frameDecoder(p) match {
-                  case Some((_, dec)) =>
-                    var i = 0
-                    while (i < starts.length) {
-                      dec(i).foreach { case (w, h, l) => add(lumaGrid(l, w, h)) }
-                      i += 1
-                    }
-                  case None =>
-                    foreachGifFrame(p, starts.length)(img => add(luminanceGrid(img)))
-                }
-              }
+              // one ImageReader per payload; MP4/WebM decode no frame
+              // and degrade below
+              foreachGifFrame(p, starts.length)(img => add(luminanceGrid(img)))
               if (decodedFrames == 0) (id, 0L, 0, decodeStub(p), false, n)
               else (id, dur, starts.length,
                 Array.tabulate(FeatureDim)(d => (acc(d) / decodedFrames).toFloat),

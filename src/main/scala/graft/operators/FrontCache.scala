@@ -3,8 +3,11 @@ package graft.operators
 import java.lang.ref.WeakReference
 
 import scala.collection.concurrent.TrieMap
+import scala.util.control.NonFatal
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.graft.Bridge
 
 /** Session-scoped registry of materialized operator FRONTS — expensive
   * intermediate frames (the prefix-doubling span front, a trained index)
@@ -106,6 +109,17 @@ object FrontCache {
     values.getOrElseUpdate((sid(spark), key), build)
       .asInstanceOf[T]
 
+  /** Unpersist a dropped frame's checkpoint blocks: a `localCheckpoint`ed
+    * frame's plan is a `LogicalRDD` over the persisted RDD, and its blocks
+    * stay pinned in executor storage until that RDD is unpersisted. A
+    * frame whose session already stopped has nothing left to release.
+    */
+  private def release(frame: DataFrame): Unit =
+    try Bridge.plan(frame).collectLeaves().foreach {
+      case l: LogicalRDD => l.rdd.unpersist(blocking = false)
+      case _ => ()
+    } catch { case NonFatal(_) => () }
+
   /** Drop this session's entries whose key starts with `keyPrefix` —
     * the bench's cold-rebuild hook (time a front build in a warm JVM
     * without discarding every OTHER front).
@@ -114,12 +128,15 @@ object FrontCache {
     val id = sid(spark)
     frames.keysIterator
       .filter(k => k._1 == id && k._2.startsWith(keyPrefix))
-      .foreach(frames.remove)
+      .foreach(k => frames.remove(k).foreach(release))
     values.keysIterator
       .filter(k => k._1 == id && k._2.startsWith(keyPrefix))
       .foreach(values.remove)
   }
 
-  /** Drop every cached front (tests; or to release executor storage). */
-  def clear(): Unit = { frames.clear(); values.clear(); owners.clear() }
+  /** Drop every cached front and release its executor storage. */
+  def clear(): Unit = {
+    frames.keysIterator.foreach(k => frames.remove(k).foreach(release))
+    values.clear(); owners.clear()
+  }
 }

@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Bridge
 
 /** Suffix-ranking substring deduplication — the scale upgrade of the
   * fixed-L gram-key approach (`dedup_substring_exact`): find all MAXIMAL
@@ -195,13 +196,14 @@ object SuffixDedup {
       .get("spark.sql.shuffle.partitions").toInt
     // explicit n: AQE never coalesces a user-numbered repartition, so
     // hash(doc_id) over exactly n partitions + the in-partition sort is
-    // the literal physical truth declareCheckpointLayout re-attaches
-    // (localCheckpoint under AQE records UnknownPartitioning)
+    // the literal physical truth declareCheckpointLayout re-attaches.
+    // Without it every consumer pays an Exchange + Sort: under AQE,
+    // localCheckpoint records UnknownPartitioning
     val pinned = labeled.select(col("doc_id"), col("pos"), col("lbl"))
       .repartition(n, col("doc_id"))
       .sortWithinPartitions(col("doc_id"), col("pos"))
       .localCheckpoint()
-    graft.plans.Layouts.declarePinnedLayout(pinned,
+    Bridge.declareCheckpointLayout(pinned,
       Seq("doc_id"), Seq("doc_id", "pos"))
   }
 

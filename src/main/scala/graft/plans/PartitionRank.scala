@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.rdd.RDD
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, Project, UnaryNode}
@@ -61,13 +61,13 @@ object PartitionRank {
     * `Window.orderBy`; bare Columns sort ascending nulls-first, the
     * window default). The key Columns are resolved against `df` through
     * the session analyzer (custom logical operators don't get Column
-    * resolution for free) and the planner strategy is registered on the
-    * session if the `GraftExtensions` config didn't already do it.
+    * resolution for free). The node plans only in a session built with
+    * `spark.sql.extensions=graft.plans.GraftExtensions`, which registers
+    * [[PartitionRankStrategy]].
     */
   def apply(df: DataFrame, sortCols: Seq[Column], pidCol: String,
             rnCol: String, drCol: String): DataFrame = {
     val spark = df.sparkSession
-    ensureStrategy(spark)
     // split direction/null-ordering off BEFORE resolution: a SortOrder is
     // not evaluable, so only its child goes through the resolving Project
     val split: Seq[(Expression, SortDirection, NullOrdering)] =
@@ -91,21 +91,9 @@ object PartitionRank {
       analyzed.child)
     Bridge.ofRows(spark, node)
   }
-
-  /** Sessions built without `spark.sql.extensions=graft.plans.GraftExtensions`
-    * (library users, ad-hoc shells) still plan the node: registration is
-    * idempotent and `extraStrategies` is consulted before the built-ins.
-    */
-  private def ensureStrategy(spark: SparkSession): Unit = {
-    val es = spark.experimental.extraStrategies
-    if (!es.contains(PartitionRankStrategy))
-      spark.experimental.extraStrategies = es :+ PartitionRankStrategy
-  }
 }
 
-/** Planner strategy registered by [[GraftExtensions]] (and lazily by
-  * [[PartitionRank.apply]]).
-  */
+/** Planner strategy registered by [[GraftExtensions]]. */
 object PartitionRankStrategy extends SparkStrategy {
   override def apply(plan: LogicalPlan): Seq[SparkPlan] = plan match {
     case PartitionRank(orders, pid, rn, dr, child) =>

@@ -58,6 +58,24 @@ class FrontCacheSpec extends AnyFunSuite {
     assert(builds == 3, "clear() must drop pinned fronts")
   }
 
+  test("invalidate and clear unpersist the checkpoint blocks they drop") {
+    FrontCache.clear()
+    // the context tracks persisted RDDs weakly, so RDDs of earlier specs
+    // may vanish at any GC: count only the ones pinned since `before`
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    def pinned = (spark.sparkContext.getPersistentRDDs.keySet -- before).size
+    def build(key: String) =
+      FrontCache.getOrCompute(spark, key)(docs.select(col("doc_id"))).count()
+    build("spec-release:a")
+    assert(pinned == 1, "a built front pins one checkpointed RDD")
+    FrontCache.invalidate(spark, "spec-release:")
+    assert(pinned == 0, "invalidate must unpersist the dropped front")
+    build("spec-release:a"); build("spec-release:b")
+    assert(pinned == 2)
+    FrontCache.clear()
+    assert(pinned == 0, "clear must unpersist every dropped front")
+  }
+
   test("bundle heads from the cached front match the standalone queries row-for-row") {
     FrontCache.clear()
     val spansCached = FrontCache.getOrCompute(spark, "spec-front:bundle")(

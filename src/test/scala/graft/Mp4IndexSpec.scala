@@ -91,6 +91,31 @@ class Mp4IndexSpec extends AnyFunSuite {
       "no JDK H.264 decoder — pixels must stay degraded")
   }
 
+  test("fuzz: random, flipped, truncated MP4 never throws") {
+    val rnd = new scala.util.Random(1453)
+    for (sz <- Seq(0, 1, 17, 128, 1024, 8192)) {
+      val junk = Array.fill(sz)(rnd.nextInt(256).toByte)
+      Multimodal.videoFrameIndex(junk)
+      assert(Multimodal.decodeVideoFrame(junk, 0).isEmpty)
+    }
+    val good = sampleMp4
+    // single-bit corruptions anywhere in the file: the index may read or
+    // not (a flip in mdat is a don't-care byte) — an escaped exception is
+    // a failure, and no MP4 ever yields pixels
+    for (_ <- 0 until 300) {
+      val mutated = good.clone()
+      val at = rnd.nextInt(mutated.length)
+      mutated(at) = (mutated(at) ^ (1 << rnd.nextInt(8))).toByte
+      Multimodal.videoFrameIndex(mutated)
+      assert(Multimodal.decodeVideoFrame(mutated, 0).isEmpty)
+    }
+    for (k <- 1 until 10) {
+      val cut = good.take(good.length * k / 10)
+      Multimodal.videoFrameIndex(cut)
+      assert(Multimodal.decodeVideoFrame(cut, 0).isEmpty)
+    }
+  }
+
   test("sampleVideoFrames: MP4 rows carry REAL frame timing with decoded=false") {
     import spark.implicits._
     val rows = Seq((1L, sampleMp4, 9999L))

@@ -77,11 +77,31 @@ class MultimodalSpec extends AnyFunSuite {
     bos.toByteArray
   }
 
+  /** A lossy WebP container: RIFF/WEBP header plus a "VP8 " chunk of
+    * keyframe-shaped bytes. The JDK ships no WebP codec.
+    */
+  private val webpBytes: Array[Byte] = {
+    val vp8 = Array[Byte](0x10, 0x02, 0x00, 0x9D.toByte, 0x01, 0x2A,
+      16, 0, 8, 0) ++ Array.fill[Byte](22)(0x5A)
+    def le32(v: Int) = Array[Byte](v.toByte, (v >> 8).toByte,
+      (v >> 16).toByte, (v >> 24).toByte)
+    "RIFF".getBytes ++ le32(4 + 8 + vp8.length) ++ "WEBP".getBytes ++
+      "VP8 ".getBytes ++ le32(vp8.length) ++ vp8
+  }
+
+  /** A FLAC stream: the `fLaC` magic, a STREAMINFO block header and
+    * payload bytes. `javax.sound.sampled` has no FLAC reader.
+    */
+  private val flacBytes: Array[Byte] =
+    "fLaC".getBytes ++ Array[Byte](0x80.toByte, 0, 0, 34) ++
+      Array.tabulate[Byte](64)(i => (i * 37).toByte)
+
   test("real image decode: true geometry, gradient shows in grid features") {
     val rows = Seq(
       Row(1L, pngBytes(16, 8), Row("img", 16, 8, 0L)),
       Row(2L, "not an image".getBytes, Row("img", 0, 0, 0L)),
-      Row(3L, null, Row("img", 0, 0, 0L)))
+      Row(3L, null, Row("img", 0, 0, 0L)),
+      Row(4L, webpBytes, Row("webp", 16, 8, 0L)))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Multimodal.MediaSchema)
     val got = Multimodal.extractImageFeatures(df).orderBy("media_id").collect()
@@ -94,9 +114,13 @@ class MultimodalSpec extends AnyFunSuite {
     // across each grid row, equal down each column
     assert(f(0) < f(1) && f(1) < f(2) && f(2) < f(3))
     assert(f.grouped(4).toSeq.distinct.size == 1)
-    // corrupt + null payloads degrade to the stub with decoded=false
-    assert(!got(1).getAs[Boolean]("decoded") && !got(2).getAs[Boolean]("decoded"))
+    // corrupt, null and WebP payloads (no JDK codec) degrade to the stub
+    // with decoded=false
+    assert(got.drop(1).forall(r => !r.getAs[Boolean]("decoded") &&
+      r.getAs[Int]("width") == 0 && r.getAs[Int]("height") == 0))
     assert(got(1).getSeq[Float](got(1).fieldIndex("features")).size == Multimodal.FeatureDim)
+    assert(got(3).getSeq[Float](got(3).fieldIndex("features")).toSeq ==
+      Multimodal.decodeStub(webpBytes).toSeq)
   }
 
   test("real audio decode: WAV duration + loud/quiet halves in features") {
@@ -122,7 +146,8 @@ class MultimodalSpec extends AnyFunSuite {
     val rows = Seq(
       Row(1L, wavBytes(500), Row("wav", 0, 0, 0L)),
       Row(2L, "not audio at all".getBytes, Row("wav", 0, 0, 0L)),
-      Row(3L, null, Row("wav", 0, 0, 0L)))
+      Row(3L, null, Row("wav", 0, 0, 0L)),
+      Row(4L, flacBytes, Row("flac", 0, 0, 0L)))
     val df = spark.createDataFrame(
       spark.sparkContext.parallelize(rows), Multimodal.MediaSchema)
     val got = Multimodal.extractAudioFeatures(df).orderBy("media_id").collect()
@@ -134,10 +159,14 @@ class MultimodalSpec extends AnyFunSuite {
     val (quiet, loud) = f.splitAt(Multimodal.FeatureDim / 2)
     assert(quiet.forall(_ < 0.01f), s"first half should be silent: $quiet")
     assert(loud.forall(_ > 0.8f), s"second half should be near full scale: $loud")
-    // corrupt + null payloads degrade to the stub with decoded=false
-    assert(!got(1).getAs[Boolean]("decoded") && !got(2).getAs[Boolean]("decoded"))
+    // corrupt, null and FLAC payloads (no JDK codec) degrade to the stub
+    // with decoded=false and duration 0
+    assert(got.drop(1).forall(r => !r.getAs[Boolean]("decoded") &&
+      r.getAs[Long]("duration_ms") == 0L))
     assert(got(1).getSeq[Float](got(1).fieldIndex("features")).size ==
       Multimodal.FeatureDim)
+    assert(got(3).getSeq[Float](got(3).fieldIndex("features")).toSeq ==
+      Multimodal.decodeStub(flacBytes).toSeq)
   }
 
   test("real image resize: thumb is a valid PNG with target geometry") {
@@ -226,89 +255,6 @@ class MultimodalSpec extends AnyFunSuite {
     val mean = got(0).getSeq[Float](got(0).fieldIndex("features"))
     assert(mean.distinct.length == 1 && mean.head > 100 && mean.head < 155)
     assert(!got(1).getAs[Boolean]("decoded") && !got(2).getAs[Boolean]("decoded"))
-  }
-
-  test("real MP4/H.264 pixel decode: I_PCM frames emit true luminance grids; entropy-coded slices degrade") {
-    val mp4 = VideoFixture.twoFrame32x16()
-    // the container index still reads real timing off the boxes
-    val Some((dur, starts)) = Multimodal.videoFrameIndex(mp4)
-    assert(dur == 2000L && starts.toSeq == Seq(0L, 1000L))
-    // frame 0: left 16×16 MB = luma 40, right = 200. The 4×4 grid over
-    // 32×16 splits columns into 8-px cells → cells 0-1 of each row read
-    // 40, cells 2-3 read 200 — EXACT values, decoded from real H.264
-    // bitstream bits (NAL → RBSP → exp-Golomb slice header → I_PCM
-    // samples), not from metadata
-    val Some((w0, h0, f0)) = Multimodal.decodeVideoFrame(mp4, 0)
-    assert(w0 == 32 && h0 == 16)
-    assert(f0.toSeq == Seq.tabulate(16)(i => if (i % 4 < 2) 40f else 200f))
-    // frame 1 is the inverted pattern — per-frame decode really seeks
-    val Some((_, _, f1)) = Multimodal.decodeVideoFrame(mp4, 1)
-    assert(f1.toSeq == Seq.tabulate(16)(i => if (i % 4 < 2) 200f else 40f))
-    assert(Multimodal.decodeVideoFrame(mp4, 2).isEmpty) // out of range
-    // end-to-end: sampleVideoFrames emits decoded=true rows with the real
-    // features for the MP4 — the row the GIF path has always had
-    val rows = Seq(Row(7L, mp4, Row("mp4", 32, 16, 0L)))
-    val df = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows), Multimodal.MediaSchema)
-    val got = Multimodal.sampleVideoFrames(df, everyMs = 1000)
-      .orderBy("frame_ms").collect()
-    assert(got.length == 2)
-    assert(got.forall(_.getAs[Boolean]("decoded")))
-    assert(got.map(_.getInt(2)).toSeq == Seq(0, 1))
-    assert(got(0).getSeq[Float](3).toSeq ==
-      Seq.tabulate(16)(i => if (i % 4 < 2) 40f else 200f))
-    // honest degrade is UNCHANGED for streams the engine can't decode:
-    // a MALFORMED slice (edge-invalid mode + garbage) fails parse, and a
-    // CABAC-coded stream is rejected at the PPS — decoded=false, never
-    // wrong pixels
-    val entropy = VideoFixture.mp4(32, 16, VideoFixture.sps(2, 1),
-      VideoFixture.pps(), Seq(VideoFixture.idrEntropySlice()))
-    assert(Multimodal.videoFrameIndex(entropy).isDefined) // container fine
-    assert(Multimodal.decodeVideoFrame(entropy, 0).isEmpty)
-    val cabac = VideoFixture.mp4(32, 16, VideoFixture.sps(2, 1),
-      VideoFixture.ppsCabac(), Seq(VideoFixture.idrIPcmSlice(2, 1, Seq(40, 200))))
-    assert(Multimodal.decodeVideoFrame(cabac, 0).isEmpty)
-    val rows2 = Seq(Row(8L, entropy, Row("mp4", 32, 16, 0L)))
-    val df2 = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows2), Multimodal.MediaSchema)
-    val got2 = Multimodal.sampleVideoFrames(df2, everyMs = 1000).collect()
-    assert(got2.nonEmpty && got2.forall(!_.getAs[Boolean]("decoded")))
-  }
-
-  test("H.264 crop units follow chroma_format_idc (§7.4.2.1.1), not a hardcoded 4:2:0 ×2") {
-    import graft.multimodal.H264
-    // monochrome: CropUnitX = CropUnitY = 1 — crop_left=2 + crop_right=1
-    // trims 3 PIXELS (the 4:2:0 hardcode would trim 6 and shift the rows)
-    val spsM = VideoFixture.spsHigh(1, 1, 0, 2, 1, 0, 0)
-    val sliceM = VideoFixture.iPcmSliceXY(1, 1, (x, _) => x,
-      chromaSamplesPerMb = 0)
-    val mp4M = VideoFixture.mp4(13, 16, spsM, VideoFixture.pps(), Seq(sliceM))
-    val Some((wM, hM, pM)) = H264.decodeFrame(mp4M, 0)
-    assert(wM == 13 && hM == 16)
-    assert((0 until 13).forall(i => (pM(i) & 0xFF) == i + 2),
-      "row 0 must be source columns 2..14")
-    // 4:2:2: CropUnitX = 2 but CropUnitY = 1 (SubHeightC = 1) —
-    // crop_top=1 + crop_bottom=2 trims 3 ROWS, not 6
-    val sps422 = VideoFixture.spsHigh(1, 1, 2, 1, 0, 1, 2)
-    val slice422 = VideoFixture.iPcmSliceXY(1, 1, (_, y) => y,
-      chromaSamplesPerMb = 256)
-    val mp4422 = VideoFixture.mp4(14, 13, sps422, VideoFixture.pps(),
-      Seq(slice422))
-    val Some((w2, h2, p2)) = H264.decodeFrame(mp4422, 0)
-    assert(w2 == 14 && h2 == 13)
-    assert((0 until 13).forall(r => (p2(r * 14) & 0xFF) == r + 1),
-      "rows must be source rows 1..13")
-  }
-
-  test("H.264 non-reference I slice (nal_ref_idc = 0): no dec_ref_pic_marking in the header, still decodes") {
-    import graft.multimodal.H264
-    val slice = VideoFixture.iPcmSliceXY(2, 1,
-      (x, _) => if (x < 16) 40 else 200, idr = false, refIdc = 0)
-    val mp4 = VideoFixture.mp4(32, 16, VideoFixture.sps(2, 1),
-      VideoFixture.pps(), Seq(slice))
-    val Some((w, h, p)) = H264.decodeFrame(mp4, 0)
-    assert(w == 32 && h == 16)
-    assert((p(0) & 0xFF) == 40 && (p(16) & 0xFF) == 200)
   }
 
   test("real video frame sampling: covering frame per instant, honest degrade") {
