@@ -2,14 +2,14 @@ package graft.multimodal
 
 /** Pure-JVM FLAC (RFC 9639) decoder for the multimodal audio column
   * family — the compressed-codec upgrade of the JDK-native WAV/PCM
-  * path. The reference pipeline has NO audio handling; like the video
-  * decoders this is a framework-native capability (opaque binary
-  * payloads + typed decode), not a reference-behavior port.
+  * path. The reference pipeline has NO audio handling; this is a
+  * framework-native capability (opaque binary payloads + typed decode),
+  * not a reference-behavior port.
   *
-  * Unlike the VP8/H.264 entropy layers, EVERYTHING here is algorithmic
-  * — Rice/unary coding, fixed and quantized-LPC predictors, CRC-8/16,
-  * inter-channel decorrelation — with no empirical probability tables
-  * to transcribe, so there is no unvalidatable-constant caveat. Better:
+  * EVERYTHING here is algorithmic — Rice/unary coding, fixed and
+  * quantized-LPC predictors, CRC-8/16, inter-channel decorrelation —
+  * with no empirical probability tables to transcribe, so there is no
+  * unvalidatable-constant caveat. Better:
   * the format carries its own end-to-end check — STREAMINFO's MD5 of
   * the unencoded PCM — and [[decode]] VERIFIES it (along with every
   * frame-header CRC-8 and frame CRC-16) whenever the encoder wrote one.
@@ -35,7 +35,7 @@ package graft.multimodal
 object Flac {
 
   /** Samples-per-channel cap: 2^28 (~1.5 h at 48 kHz) keeps a hostile
-    * header from allocating GBs, matching the video decoders' caps.
+    * header from allocating GBs.
     */
   val MaxTotalSamples: Long = 1L << 28
 

@@ -10,7 +10,8 @@ import org.apache.spark.sql.types._
   *
   * IMAGE decode/resize is REAL (`javax.imageio`, JDK-native PNG/JPEG/BMP/
   * GIF — [[extractImageFeatures]], [[resizeImages]]); AUDIO decode is
-  * REAL for WAV/PCM and anything else `javax.sound.sampled` can open
+  * REAL for WAV/PCM and anything else `javax.sound.sampled` can open,
+  * and for FLAC through the in-engine [[Flac]] decoder
   * ([[extractAudioFeatures]]). VIDEO decode is REAL for the one
   * multi-frame container the JDK ships a codec for — animated GIF
   * ([[videoFrameIndex]] metadata-only frame timing, [[decodeVideoFrame]]
@@ -18,8 +19,8 @@ import org.apache.spark.sql.types._
   * [[sampleVideoFrames]] on top). In all three, a payload the JDK codec
   * cannot parse falls back to the deterministic byte-hash stub with a
   * `decoded=false` flag, so a mixed or corrupt batch degrades row-wise
-  * instead of failing the task; MP4/WebM pixels, FLAC audio and WebP
-  * images take that degrade path until a JNI/FFmpeg decoder replaces the
+  * instead of failing the task; MP4/WebM pixels and WebP images take
+  * that degrade path until a JNI/FFmpeg decoder replaces the
   * leaf functions — the schema contract, size-aware repartitioning, and
   * mapPartitions batch shape do not change.
   *
@@ -146,15 +147,39 @@ object Multimodal {
       .toDF("media_id", "width", "height", "features", "decoded", "n_bytes")
   }
 
-  /** Real audio decode through `javax.sound.sampled` (JDK-native
-    * WAV/PCM — AIFF/AU too): stream → PCM → ([[FeatureDim]] windows of
-    * mean |amplitude|, channel-averaged and normalized to [0,1],
-    * time-ordered — the 1-D analog of the image path's luminance grid),
-    * plus the clip duration in ms. None when the payload isn't audio the
-    * JDK can open — FLAC included.
+  /** Real audio decode: FLAC through [[Flac]] (compressed codec, decode
+    * MD5/CRC-verified against the encoder's own signature), everything
+    * else through `javax.sound.sampled` (JDK-native WAV/PCM — AIFF/AU
+    * too): stream → PCM → ([[FeatureDim]] windows of mean |amplitude|,
+    * channel-averaged and normalized to [0,1], time-ordered — the 1-D
+    * analog of the image path's luminance grid), plus the clip duration
+    * in ms. None when the payload isn't decodable audio — a FLAC stream
+    * that fails its CRC/MD5 checks included.
     */
   def decodeAudio(payload: Array[Byte]): Option[(Long, Array[Float])] = {
     if (payload == null || payload.isEmpty) return None
+    if (payload.length >= 4 && payload(0) == 'f' && payload(1) == 'L' &&
+      payload(2) == 'a' && payload(3) == 'C') {
+      return Flac.decode(payload).map { case (si, chans) =>
+        val n = chans(0).length
+        val durationMs = math.round(n * 1000.0 / si.sampleRate)
+        val norm = math.pow(2.0, si.bps - 1)
+        val sums = new Array[Double](FeatureDim)
+        val counts = new Array[Long](FeatureDim)
+        var i = 0
+        while (i < n) {
+          var c = 0
+          var acc = 0.0
+          while (c < si.channels) { acc += math.abs(chans(c)(i).toDouble); c += 1 }
+          val cell = math.min(FeatureDim - 1, i.toLong * FeatureDim / n).toInt
+          sums(cell) += acc / si.channels / norm
+          counts(cell) += 1
+          i += 1
+        }
+        (durationMs, Array.tabulate(FeatureDim)(d =>
+          if (counts(d) == 0) 0f else (sums(d) / counts(d)).toFloat))
+      }
+    }
     import javax.sound.sampled.{AudioFormat, AudioSystem}
     try {
       val ais = AudioSystem.getAudioInputStream(

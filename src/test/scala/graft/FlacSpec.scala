@@ -5,8 +5,8 @@ import org.apache.spark.sql.Row
 import graft.multimodal.{Flac, Multimodal}
 import FlacFixture.{Constant, Fixed, Frame, Lpc, Verbatim}
 
-/** FLAC decode laws. Unlike the video entropy layers there are no
-  * empirical tables — everything is algorithmic — and the format
+/** FLAC decode laws. There are no empirical tables — everything is
+  * algorithmic — and the format
   * carries its own end-to-end oracle: the engine verifies STREAMINFO's
   * PCM MD5 and both CRCs, so every round-trip here cross-checks all
   * decoded samples cryptographically (the fixture computes the MD5 from

@@ -89,8 +89,9 @@ class MultimodalSpec extends AnyFunSuite {
       "VP8 ".getBytes ++ le32(vp8.length) ++ vp8
   }
 
-  /** A FLAC stream: the `fLaC` magic, a STREAMINFO block header and
-    * payload bytes. `javax.sound.sampled` has no FLAC reader.
+  /** A corrupt FLAC stream: the `fLaC` magic, a STREAMINFO block header
+    * and payload bytes with no valid frame — it fails the FLAC decoder's
+    * checks, and `javax.sound.sampled` has no FLAC reader to fall back to.
     */
   private val flacBytes: Array[Byte] =
     "fLaC".getBytes ++ Array[Byte](0x80.toByte, 0, 0, 34) ++
@@ -159,8 +160,8 @@ class MultimodalSpec extends AnyFunSuite {
     val (quiet, loud) = f.splitAt(Multimodal.FeatureDim / 2)
     assert(quiet.forall(_ < 0.01f), s"first half should be silent: $quiet")
     assert(loud.forall(_ > 0.8f), s"second half should be near full scale: $loud")
-    // corrupt, null and FLAC payloads (no JDK codec) degrade to the stub
-    // with decoded=false and duration 0
+    // corrupt, null and corrupt-FLAC payloads degrade to the stub with
+    // decoded=false and duration 0
     assert(got.drop(1).forall(r => !r.getAs[Boolean]("decoded") &&
       r.getAs[Long]("duration_ms") == 0L))
     assert(got(1).getSeq[Float](got(1).fieldIndex("features")).size ==
