@@ -113,8 +113,9 @@ object FrontCache {
     * frame's plan is a `LogicalRDD` over the persisted RDD, and its blocks
     * stay pinned in executor storage until that RDD is unpersisted. A
     * frame whose session already stopped has nothing left to release.
+    * Also the release step of the pipeline routes' per-batch pins.
     */
-  private def release(frame: DataFrame): Unit =
+  private[graft] def release(frame: DataFrame): Unit =
     try Bridge.plan(frame).collectLeaves().foreach {
       case l: LogicalRDD => l.rdd.unpersist(blocking = false)
       case _ => ()

@@ -1,7 +1,15 @@
 package graft.operators
 
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.util.concurrent.ConcurrentHashMap
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.execution.datasources.{FileStatusCache, HadoopFsRelation,
+  InMemoryFileIndex, LogicalRelation}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.graft.Bridge
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** Parquet-backed warehouse with snapshot-swap semantics (SURVEY.md §7.1.2,
   * K1–K4). Plain Parquet has no row-level ops, so upserts write a NEW
@@ -9,11 +17,89 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * a complete snapshot. At cluster scale the same layout works on any
   * object store (pointer file on a consistent store); per-table snapshot
   * GC keeps the last N.
+  *
+  * Reads launch no Spark job: every snapshot this instance writes has its
+  * schema PINNED (the written schema, nullable, partition columns last),
+  * keyed by snapshot directory — snapshots are immutable, so a pin can
+  * never go stale. A snapshot some other writer produced is inferred once
+  * and then pinned. [[read]]/[[readAt]] hand the pin to the parquet source,
+  * the same contract `Tables.load` and [[FrontStore]] follow.
+  *
+  * [[append]] is O(batch) when the batch's columns are a subset of the
+  * standing schema with equal types: only the batch is written, and the
+  * previous snapshot's data files carry over by hardlink. Any other schema
+  * falls back to a `unionByName` rewrite.
   */
 class Warehouse(spark: SparkSession, root: String) {
 
   private def tableDir(name: String) = Paths.get(root, name)
   private def pointer(name: String)  = tableDir(name).resolve("_current")
+
+  /** Read schema per snapshot directory (see the class doc). */
+  private val pins = new ConcurrentHashMap[String, StructType]()
+
+  /** Pin the schema of a snapshot written from `written` with
+    * `partitionBy(partitionCols)`: the layout the parquet source reports
+    * for that directory — every field nullable, partition columns last.
+    */
+  private def pin(dir: Path, written: StructType, partitionCols: Seq[String]): Unit = {
+    val all = Warehouse.nullable(written).asInstanceOf[StructType]
+    val (parts, data) = all.fields.partition(f => partitionCols.contains(f.name))
+    val partsInOrder = partitionCols.flatMap(c => parts.find(_.name == c))
+    pins.put(dir.toString, StructType(data ++ partsInOrder))
+  }
+
+  /** The read schema of a snapshot: pinned, or inferred once and pinned.
+    * Before inferring a snapshot another writer produced, the pins of this
+    * table's snapshots that writer's GC has deleted are dropped.
+    */
+  private def schemaAt(dir: Path): StructType =
+    Option(pins.get(dir.toString)).getOrElse {
+      pins.keySet.removeIf(k =>
+        Paths.get(k).getParent == dir.getParent && !Files.exists(Paths.get(k)))
+      pins.computeIfAbsent(dir.toString, d =>
+        Warehouse.nullable(spark.read.parquet(d).schema).asInstanceOf[StructType])
+    }
+
+  /** `spark.read.schema(pinned).parquet(dir)`, with the snapshot's files
+    * listed here on the driver and handed to the file index: the parquet
+    * source lists a directory of more than
+    * `spark.sql.sources.parallelPartitionDiscovery.threshold` (32)
+    * partition directories with a Spark job, and a day-partitioned table
+    * passes that after a month.
+    */
+  private def readDir(dir: Path): DataFrame = {
+    val schema = schemaAt(dir)
+    val local = new HPath(dir.toAbsolutePath.toString)
+    val fs = local.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val root = fs.makeQualified(local)
+    val files = Warehouse.visibleFiles(dir.toFile, root, fs.getDefaultBlockSize(root))
+    val listed = new FileStatusCache {
+      override def getLeafFiles(p: HPath): Option[Array[FileStatus]] =
+        if (p == root) Some(files) else None
+      override def putLeafFiles(p: HPath, f: Array[FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    val index = new InMemoryFileIndex(spark, Seq(root), Map.empty, Some(schema), listed)
+    val parts = index.partitionSchema
+    val relation = HadoopFsRelation(index, parts,
+      StructType(schema.filterNot(f => parts.fieldNames.contains(f.name))), None,
+      new ParquetFileFormat, Map.empty)(spark)
+    Bridge.ofRows(spark, LogicalRelation(relation))
+  }
+
+  /** Write `df` as a new snapshot of `name`, laid out by `partitionCols`,
+    * and pin its schema. The pointer is not swapped.
+    */
+  private def writeSnapshot(name: String, df: DataFrame,
+                            partitionCols: Seq[String]): (String, Path) = {
+    Files.createDirectories(tableDir(name))
+    val snap = nextSnap(name)
+    val dir = tableDir(name).resolve(snap)
+    df.write.mode("overwrite").partitionBy(partitionCols: _*).parquet(dir.toString)
+    pin(dir, df.schema, partitionCols)
+    (snap, dir)
+  }
 
   /** Next snapshot name: max(existing ids) + 1, zero-padded to a fixed 20
     * digits. The previous `snap-<nanoTime>` scheme broke LEXICOGRAPHIC
@@ -72,10 +158,11 @@ class Warehouse(spark: SparkSession, root: String) {
   private def currentSnapshot(name: String): Option[String] =
     if (exists(name)) Some(Files.readString(pointer(name)).trim) else None
 
+  /** The current snapshot, read with its pinned schema (no Spark job). */
   def read(name: String): DataFrame = {
     val snap = currentSnapshot(name).getOrElse(
       throw new IllegalArgumentException(s"no such table: $name"))
-    spark.read.parquet(tableDir(name).resolve(snap).toString)
+    readDir(tableDir(name).resolve(snap))
   }
 
   /** Directory of the CURRENT snapshot — for readers that bring their
@@ -90,21 +177,47 @@ class Warehouse(spark: SparkSession, root: String) {
 
   /** K2 — truncate-overwrite: write a fresh snapshot, swap the pointer. */
   def overwrite(name: String, df: DataFrame): Unit = synchronized {
-    Files.createDirectories(tableDir(name))
-    val snap = nextSnap(name)
-    df.write.mode("overwrite").parquet(tableDir(name).resolve(snap).toString)
-    swapPointer(name, snap)
+    swapPointer(name, writeSnapshot(name, df, Nil)._1)
   }
 
-  /** K1 — append: union with current snapshot into a new snapshot (keeps
-    * swap atomicity; no in-place mutation of a live snapshot).
+  /** K1 — append into a new snapshot (keeps swap atomicity; no in-place
+    * mutation of a live snapshot).
+    *
+    * Linked path, when every batch column exists in the standing schema
+    * with an equal type (nullability aside): the batch alone is written —
+    * standing columns it lacks as typed nulls, laid out by the standing
+    * snapshot's partition columns — and the previous snapshot's data files
+    * are hardlinked beside it, the carry-over [[replacePartitions]] makes.
+    * A 6-hour batch writes 6 hours of rows, not the table. Any other batch
+    * schema (a new column, a changed type) rewrites through `unionByName`,
+    * still in the standing partition layout.
     */
   def append(name: String, df: DataFrame): Unit = synchronized {
-    // synchronized around the WHOLE read-modify-write, not just the inner
-    // overwrite: two concurrent appends that both resolved the same base
-    // snapshot before either committed would silently drop one batch
-    if (!exists(name)) overwrite(name, df)
-    else overwrite(name, read(name).unionByName(df, allowMissingColumns = true))
+    // synchronized around the WHOLE read-modify-write: two concurrent
+    // appends that both resolved the same base snapshot before either
+    // committed would silently drop one batch
+    currentSnapshot(name) match {
+      case None => overwrite(name, df)
+      case Some(cur) =>
+        val oldDir = tableDir(name).resolve(cur)
+        val standing = schemaAt(oldDir)
+        val pCols = partitionColsOf(oldDir.toFile)
+        val linkable = df.schema.fields.forall(f =>
+          standing.find(_.name == f.name).exists(_.dataType == Warehouse.nullable(f.dataType)))
+        if (linkable) {
+          val batch = df.select(standing.fields.toSeq.map(f =>
+            if (df.columns.contains(f.name)) col(s"`${f.name.replace("`", "``")}`")
+            else lit(null).cast(f.dataType).as(f.name)): _*)
+          val (snap, newDir) = writeSnapshot(name, batch, pCols)
+          linkTree(oldDir, newDir, f => Warehouse.isDataFile(f.getName))
+          pins.put(newDir.toString, standing)
+          swapPointer(name, snap)
+        } else {
+          val union = read(name).unionByName(df, allowMissingColumns = true)
+          if (pCols.isEmpty) overwrite(name, union)
+          else overwritePartitioned(name, union, pCols)
+        }
+    }
   }
 
   /** Small-file compaction: rewrite the current snapshot into
@@ -130,7 +243,6 @@ class Warehouse(spark: SparkSession, root: String) {
       // Clustering the shuffle by the partition columns keeps each
       // partition's rows in few tasks, so partitionBy writes few files per
       // partition instead of nFiles × nPartitions splinters.
-      import org.apache.spark.sql.functions.col
       val clustered = read(name).repartition(nFiles, pCols.map(col): _*)
       overwritePartitioned(name, clustered, pCols)
     }
@@ -156,7 +268,7 @@ class Warehouse(spark: SparkSession, root: String) {
     require(snapshots(name).contains(snapshot),
       s"no retained snapshot '$snapshot' for table '$name' " +
         s"(have: ${snapshots(name).mkString(", ")})")
-    spark.read.parquet(tableDir(name).resolve(snapshot).toString)
+    readDir(tableDir(name).resolve(snapshot))
   }
 
   /** Data files of the current snapshot, as snapshot-relative paths
@@ -195,7 +307,6 @@ class Warehouse(spark: SparkSession, root: String) {
   def stagedPartitionPredicate(staging: DataFrame,
                                partitionCols: Seq[String],
                                maxPartitions: Int = 1000): Column = {
-    import org.apache.spark.sql.functions.{col, lit}
     val touched = staging
       .select(partitionCols.map(col): _*).distinct().collect()
     require(touched.length <= maxPartitions,
@@ -243,7 +354,6 @@ class Warehouse(spark: SparkSession, root: String) {
     else {
       val pred = stagedPartitionPredicate(staging, partitionCols)
       if (validateKeys) {
-        import org.apache.spark.sql.functions.col
         val strays = read(name).where(!pred).select(col(key))
           .join(staging.select(col(key)).distinct(), Seq(key), "left_semi")
         val sample = strays.limit(5).collect().map(_.get(0)).mkString(", ")
@@ -268,11 +378,7 @@ class Warehouse(spark: SparkSession, root: String) {
     */
   def overwritePartitioned(name: String, df: DataFrame,
                            partitionCols: Seq[String]): Unit = synchronized {
-    Files.createDirectories(tableDir(name))
-    val snap = nextSnap(name)
-    df.write.mode("overwrite").partitionBy(partitionCols: _*)
-      .parquet(tableDir(name).resolve(snap).toString)
-    swapPointer(name, snap)
+    swapPointer(name, writeSnapshot(name, df, partitionCols)._1)
   }
 
   /** Leaf partition directories of a snapshot (`depth` levels of
@@ -289,19 +395,27 @@ class Warehouse(spark: SparkSession, root: String) {
     walk(snapDir, 0).map(f => snapDir.toPath.relativize(f.toPath).toString)
   }
 
-  /** Hardlink `src`'s tree under `dst` (copy where the filesystem refuses
-    * links). Hardlinks — not symlinks — so snapshot GC of the source
-    * snapshot never breaks the carried-over data.
+  /** Hardlink the files of `src`'s tree that `keep` accepts under `dst`
+    * (copy where the filesystem refuses links). Hardlinks — not symlinks —
+    * so snapshot GC of the source snapshot never breaks the carried-over
+    * data. A name already present under `dst` fails loudly: carried-over
+    * files never replace freshly written ones.
     */
-  private def linkTree(src: java.nio.file.Path, dst: java.nio.file.Path): Unit = {
+  private def linkTree(src: Path, dst: Path,
+                       keep: java.io.File => Boolean = _ => true): Unit = {
     Files.createDirectories(dst)
     Option(src.toFile.listFiles()).getOrElse(Array.empty).foreach {
       case f if f.isFile =>
-        val to = dst.resolve(f.getName)
-        try Files.createLink(to, f.toPath)
-        catch { case _: UnsupportedOperationException | _: java.io.IOException =>
-          Files.copy(f.toPath, to, StandardCopyOption.REPLACE_EXISTING) }
-      case d => linkTree(d.toPath, dst.resolve(d.getName))
+        if (keep(f)) {
+          val to = dst.resolve(f.getName)
+          try Files.createLink(to, f.toPath)
+          catch {
+            case e: java.nio.file.FileAlreadyExistsException => throw e
+            case _: UnsupportedOperationException | _: java.io.IOException =>
+              Files.copy(f.toPath, to)
+          }
+        }
+      case d => linkTree(d.toPath, dst.resolve(d.getName), keep)
     }
   }
 
@@ -326,17 +440,13 @@ class Warehouse(spark: SparkSession, root: String) {
           // previous snapshot): no directory-level carry-over exists —
           // rewrite through the anti-join path once; subsequent replaces
           // hit the linked fast path
-          val incoming = df.select(partitionCols
-            .map(org.apache.spark.sql.functions.col): _*).distinct()
+          val incoming = df.select(partitionCols.map(col): _*).distinct()
           val kept = read(name).join(incoming, partitionCols, "left_anti")
           overwritePartitioned(name,
             kept.unionByName(df, allowMissingColumns = true), partitionCols)
           return
         }
-        val snap = nextSnap(name)
-        val newDir = tableDir(name).resolve(snap)
-        df.write.mode("overwrite").partitionBy(partitionCols: _*)
-          .parquet(newDir.toString)
+        val (snap, newDir) = writeSnapshot(name, df, partitionCols)
         val replaced = leafPartitionDirs(newDir.toFile, partitionCols.length).toSet
         leafPartitionDirs(oldDir.toFile, partitionCols.length)
           .filterNot(replaced)
@@ -373,6 +483,43 @@ class Warehouse(spark: SparkSession, root: String) {
         x.delete()
       }
       rm(f)
+      pins.remove(f.toPath.toString)
     }
   }
+}
+
+object Warehouse {
+  /** `dt` with every field, element and value nullable — the schema the
+    * parquet source reports for data written from `dt`
+    * (`StructType.asNullable` is not public).
+    */
+  private def nullable(dt: DataType): DataType = dt match {
+    case s: StructType =>
+      StructType(s.fields.map(f => f.copy(dataType = nullable(f.dataType), nullable = true)))
+    case a: ArrayType => ArrayType(nullable(a.elementType), containsNull = true)
+    case m: MapType =>
+      MapType(nullable(m.keyType), nullable(m.valueType), valueContainsNull = true)
+    case other => other
+  }
+
+  /** The files under `dir` (whose qualified path is `root`) the parquet
+    * source would read — none under a hidden (`.x`) or committer (`_x`,
+    * not `col=value`) name — as the statuses its own listing builds.
+    * Read off `java.io`: a Hadoop located listing of the local filesystem
+    * forks a `stat` process per file for permissions nothing here reads.
+    */
+  private def visibleFiles(dir: java.io.File, root: HPath, blockSize: Long): Array[FileStatus] =
+    Option(dir.listFiles()).getOrElse(Array.empty).sortBy(_.getName).flatMap { f =>
+      val name = f.getName
+      if (name.startsWith(".") || (name.startsWith("_") && !name.contains("="))) Array.empty[FileStatus]
+      else if (f.isDirectory) visibleFiles(f, new HPath(root, name), blockSize)
+      else Array(new FileStatus(f.length(), false, 1, blockSize, f.lastModified(),
+        new HPath(root, name)))
+    }
+
+  /** A snapshot's data files: parquet parts and their checksums (not
+    * `_SUCCESS` or other committer markers).
+    */
+  private def isDataFile(fileName: String): Boolean =
+    fileName.endsWith(".parquet") || fileName.endsWith(".parquet.crc")
 }

@@ -4,19 +4,35 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.{TextFns, TimeFns}
 import graft.llm.{LlmExtract, LlmGateway}
-import graft.operators.{Convo, GeocodeJoin, Warehouse}
+import graft.operators.{Convo, FrontCache, GeocodeJoin, Warehouse}
 import graft.sources.{LiveAgentApi, LiveAgentSource, RateLimiter, TicketRef}
 
 /** The three §3 lifecycles as composable jobs over a Warehouse, plus the
   * metrics job — the engine-side equivalents of the reference's FastAPI
   * routes (SURVEY.md §3.1–§3.3; `api/app.py:45-55` ordering:
   * agents → tags → tickets → convo).
+  *
+  * Each batch route evaluates its batch ONCE: the frame every later write,
+  * collect and count reads is `localCheckpoint`ed ([[withPins]]) and
+  * released before the route returns. Without the pin each action re-ran
+  * the batch's whole upstream plan — the source parse, the enrichment
+  * joins, and in [[processConvos]] the LLM gateway call per conversation.
   */
 final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
                       llm: LlmGateway,
                       ids: MessageEnrich.Ids =
                         MessageEnrich.Ids("system-user", "special-user", "Brand"),
                       limiter: Option[RateLimiter] = None) {
+
+  /** Run `body` with a pin function: each frame passed to it is
+    * `localCheckpoint`ed (evaluated once, eagerly), and every pinned frame
+    * is unpersisted when `body` returns or throws.
+    */
+  private def withPins[T](body: (DataFrame => DataFrame) => T): T = {
+    val pinned = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    try body { df => val p = df.localCheckpoint(); pinned += p; p }
+    finally pinned.foreach(FrontCache.release)
+  }
 
   /** §3.3 — dimension refresh: fetch + tz-normalize + truncate-overwrite. */
   def refreshAgents(): Long = {
@@ -63,35 +79,38 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     val raw = LiveAgentSource.paginate(spark, api, "tickets",
       LiveAgentSource.windowFilters(windowField, start, end))
     if (raw.isEmpty) return 0L
-    var t = LiveAgentSource.processTickets(raw)
-      .withColumn("datetime_extracted", lit(runTs).cast("timestamp_ntz"))
-    for (c <- Seq("date_created", "date_changed", "date_resolved") if t.columns.contains(c))
-      t = t.withColumn(c, TimeFns.parseToManila(col(c)).cast("timestamp_ntz"))
-    if (t.columns.contains("custom_fields"))
-      t = t.withColumn("custom_fields", TextFns.singleElementOrNull(col("custom_fields")))
-    val standingCols =
-      if (wh.exists("tickets")) wh.read("tickets").columns.toSeq else Nil
-    if (t.columns.contains("date_created") &&
-        (standingCols.isEmpty || standingCols.contains("date_created"))) {
-      if (standingCols.nonEmpty &&
-          !standingCols.contains(Pipelines.TicketsPartitionCol)) {
-        // one-time layout migration of a pre-partitioning table: derive
-        // the day column for the standing rows and rewrite partitioned —
-        // the O(table) cost paid ONCE; every later batch is scoped
-        wh.overwritePartitioned("tickets",
-          wh.read("tickets").withColumn(Pipelines.TicketsPartitionCol,
-            to_date(col("date_created"))),
+    withPins { pin =>
+      var t = LiveAgentSource.processTickets(raw)
+        .withColumn("datetime_extracted", lit(runTs).cast("timestamp_ntz"))
+      for (c <- Seq("date_created", "date_changed", "date_resolved") if t.columns.contains(c))
+        t = t.withColumn(c, TimeFns.parseToManila(col(c)).cast("timestamp_ntz"))
+      if (t.columns.contains("custom_fields"))
+        t = t.withColumn("custom_fields", TextFns.singleElementOrNull(col("custom_fields")))
+      t = pin(t)
+      val standingCols =
+        if (wh.exists("tickets")) wh.read("tickets").columns.toSeq else Nil
+      if (t.columns.contains("date_created") &&
+          (standingCols.isEmpty || standingCols.contains("date_created"))) {
+        if (standingCols.nonEmpty &&
+            !standingCols.contains(Pipelines.TicketsPartitionCol)) {
+          // one-time layout migration of a pre-partitioning table: derive
+          // the day column for the standing rows and rewrite partitioned —
+          // the O(table) cost paid ONCE; every later batch is scoped
+          wh.overwritePartitioned("tickets",
+            wh.read("tickets").withColumn(Pipelines.TicketsPartitionCol,
+              to_date(col("date_created"))),
+            Seq(Pipelines.TicketsPartitionCol))
+        }
+        val staged = t.withColumn(Pipelines.TicketsPartitionCol,
+          to_date(col("date_created")))
+        wh.upsertPartitioned("tickets", staged, "id", updateCols,
           Seq(Pipelines.TicketsPartitionCol))
-      }
-      val staged = t.withColumn(Pipelines.TicketsPartitionCol,
-        to_date(col("date_created")))
-      wh.upsertPartitioned("tickets", staged, "id", updateCols,
-        Seq(Pipelines.TicketsPartitionCol))
-    } else
-      // degenerate feed or standing table without a creation time: no
-      // stable partition column exists, fall back to the whole-table merge
-      wh.upsert("tickets", t, "id", updateCols)
-    t.count()
+      } else
+        // degenerate feed or standing table without a creation time: no
+        // stable partition column exists, fall back to the whole-table merge
+        wh.upsert("tickets", t, "id", updateCols)
+      t.count()
+    }
   }
 
   /** Messages leg, TicketMessageProcessor parity
@@ -108,14 +127,14 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * one key-projected scan, no full-table rewrite) and within-batch
     * re-deliveries. Default stays reference-exact.
     */
-  def processMessages(groups: DataFrame, dedupe: Boolean = false): Long = {
+  def processMessages(groups: DataFrame, dedupe: Boolean = false): Long = withPins { pin =>
     // the reference keeps the inner body's plain name — every other inner
     // field gets the message_ prefix (`core/Ticket.py:170-181`)
     val flat0 = LiveAgentSource.flattenMessageGroups(groups)
-    val flat =
+    val flat = pin(
       if (flat0.columns.contains("message_message") && !flat0.columns.contains("message"))
         flat0.withColumnRenamed("message_message", "message")
-      else flat0
+      else flat0)
     val agents =
       if (wh.exists("agents")) wh.read("agents").select(col("id"), col("name"))
       else spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
@@ -191,11 +210,13 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
         notAgent.join(wh.read("users").select(col("id").cast("string").as("id")),
           Seq("id"), "left_anti")
       else notAgent
-    val missCount = misses.count()
-    require(missCount <= maxPointFetches,
-      s"refreshUsers: $missCount cache-miss ids exceed maxPointFetches=" +
-        s"$maxPointFetches — preload the users dimension before this batch")
-    val missIds = misses.collect().map(_.getString(0)).toSeq.sorted
+    // one evaluation of the miss set: fetch one id past the guard, so an
+    // oversized set is detected without counting it first
+    val missIds = misses.limit(math.min(maxPointFetches + 1, Int.MaxValue).toInt)
+      .collect().map(_.getString(0)).toSeq.sorted
+    require(missIds.length <= maxPointFetches,
+      s"refreshUsers: more than $maxPointFetches cache-miss ids " +
+        "(maxPointFetches) — preload the users dimension before this batch")
     if (missIds.isEmpty) return 0L
     val fetched = LiveAgentSource.fetchUsers(spark, api, missIds, limiter)
     if (fetched.isEmpty) return 0L
@@ -215,11 +236,14 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
                     serviceable: DataFrame, svcNameCol: String,
                     updateCols: Seq[String],
                     runTs: java.sql.Timestamp =
-                      java.sql.Timestamp.valueOf("1970-01-01 00:00:00")): Long = {
+                      java.sql.Timestamp.valueOf("1970-01-01 00:00:00")): Long = withPins { pin =>
     val convos = Convo.conversationText(messages)
-    val analysis = LlmExtract.extract(
+    // pinned: the geocode branch and the join both read `analysis`, and
+    // the gateway answer is not deterministic — one call per conversation,
+    // and the history row and the current row carry the same answer
+    val analysis = pin(LlmExtract.extract(
       convos.select(col("ticket_id").cast("string").as("ticket_id"), col("convo")),
-      "ticket_id", "convo", llm)
+      "ticket_id", "convo", llm))
     val geo = GeocodeJoin.bestMatch(
         analysis.where(col("location") =!= "").select(col("ticket_id"), col("location")),
         refTable, "location", refNameCol, "ticket_id")
@@ -240,7 +264,7 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
           .cast("timestamp_ntz"))
     val dropCols = Seq("score", "accepted", "input_address", "lat", "lng", "error") ++
       stamped.columns.filter(_.toLowerCase.contains("metadata"))
-    val fin = stamped.drop(dropCols: _*)
+    val fin = pin(stamped.drop(dropCols: _*))
     wh.append("convo_analysis_history", fin)
     wh.upsert("convo_analysis", fin, "ticket_id", updateCols)
     fin.count()

@@ -265,6 +265,187 @@ class OperatorsSpec extends AnyFunSuite {
       ("2024-01-02", 9L, 99.0)))
   }
 
+  // ---- Warehouse: pinned reads, O(batch) append ----------------------
+
+  private def whDir(tag: String): String =
+    java.nio.file.Files.createTempDirectory(s"graft-wh-$tag").toString
+
+  private def snapFile(dir: String, table: String, snap: String, rel: String) =
+    java.nio.file.Paths.get(dir, table, snap, rel)
+
+  private def rowSet(df: org.apache.spark.sql.DataFrame): Set[Seq[Any]] =
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSet
+
+  test("Warehouse read launches no Spark job after every write path") {
+    val dir = whDir("zero-job")
+    val wh = new Warehouse(spark, dir)
+    def jobFree(step: String, table: String): Unit = {
+      val n = SparkTestBase.jobsDuring(wh.read(table).queryExecution.analyzed)
+      assert(n == 0, s"read('$table') after $step launched $n jobs, expected 0")
+    }
+    wh.overwrite("t", Seq(("a", 1)).toDF("id", "v"))
+    jobFree("overwrite", "t")
+    wh.append("t", Seq(("b", 2)).toDF("id", "v"))
+    jobFree("linked append", "t")
+    wh.overwritePartitioned("ev",
+      Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0)).toDF("dt", "id", "v"),
+      Seq("dt"))
+    jobFree("overwritePartitioned", "ev")
+    wh.replacePartitions("ev", Seq(("2024-01-02", 2L, 21.0)).toDF("dt", "id", "v"), Seq("dt"))
+    jobFree("replacePartitions", "ev")
+    wh.upsertPartitioned("ev", Seq(("2024-01-03", 3L, 30.0)).toDF("dt", "id", "v"),
+      "id", Seq("v"), Seq("dt"))
+    jobFree("upsertPartitioned", "ev")
+    wh.append("ev", Seq(("2024-01-04", 4L, 40.0)).toDF("dt", "id", "v"))
+    jobFree("linked partitioned append", "ev")
+    assert(wh.read("ev").count() == 4)
+    // more partition directories than the parquet source lists serially
+    wh.overwritePartitioned("wide", (1 to 40).map(i => (f"d$i%02d", i)).toDF("day", "v"),
+      Seq("day"))
+    jobFree("a 40-partition overwritePartitioned", "wide")
+    assert(wh.read("wide").count() == 40)
+    // a snapshot this instance did not write is inferred once, then pinned
+    val other = new Warehouse(spark, dir)
+    val first = SparkTestBase.jobsDuring(other.read("t").queryExecution.analyzed)
+    assert(first > 0, "the counter must see the one inference job")
+    val n = SparkTestBase.jobsDuring(other.read("t").queryExecution.analyzed)
+    assert(n == 0, s"a second read of a foreign snapshot launched $n jobs")
+  }
+
+  test("Warehouse pins: the pipeline's tables carry the schema inference would report") {
+    import graft.llm.MockLlmGateway
+    import graft.pipeline.{ColumnContracts, Pipelines}
+    import graft.sources.{FixtureApi, TicketRef}
+    val wh = new Warehouse(spark, whDir("pins"))
+    def group(gid: String, user: String, mid: String, text: String, at: String) =
+      s"""{"id":"$gid","userid":"$user","datecreated":"$at","messages":""" +
+        s"""[{"id":"$mid","message":"$text","datecreated":"$at"}]}"""
+    val api = new FixtureApi(Map(
+      "agents" -> Seq(Seq("""{"id":"A1","name":"Alice"}""")),
+      "tickets" -> Seq(Seq(
+        """{"id":"T1","subject":"s1","tags":["a"],"owner_name":"Owen","agentid":"A1","date_created":"2024-01-01 02:00:00"}""",
+        """{"id":"T2","subject":"s2","tags":[],"owner_name":"Owen","agentid":"A1","date_created":"2024-01-02 03:00:00"}""")),
+      "tickets/T1/messages" -> Seq(Seq(
+        group("g1", "C7", "m1", "Address: quezon city", "2024-01-01 10:00:00"),
+        group("g2", "A1", "m2", "noted", "2024-01-01 10:05:00"))),
+      "tickets/T2/messages" -> Seq(Seq(
+        group("g3", "C8", "m3", "Address: makati", "2024-01-02 11:00:00"))),
+      "users/C7" -> Seq(Seq("""{"name":"Cara","email":"c@x.ph"}""")),
+      "users/C8" -> Seq(Seq("""{"name":"Cal","email":"d@x.ph"}"""))))
+    val p = new Pipelines(spark, wh, api, new MockLlmGateway)
+    val ref = Seq("quezon city", "makati").toDF("ref_name")
+    val svc = Seq("quezon city").toDF("svc_name")
+    p.refreshAgents()
+    for (day <- Seq("2024-02-01", "2024-02-02")) {
+      val runTs = java.sql.Timestamp.valueOf(s"$day 00:00:00")
+      p.processTickets("date_created", "2024-01-01", day, runTs,
+        ColumnContracts.TicketsUpdateColumns)
+      p.processTicketMessages(Seq(TicketRef("T1"), TicketRef("T2")))
+      val msgs = wh.read("messages").select(col("ticket_id"), col("sender_type"),
+        col("message"), col("message_datecreated").as("datecreated"))
+      p.processConvos(msgs, ref, "ref_name", svc, "svc_name",
+        ColumnContracts.ConvoUpdateColumns, runTs)
+    }
+    assert(wh.read("tickets").columns.contains(Pipelines.TicketsPartitionCol))
+    for (t <- Seq("tickets", "messages", "users", "convo_analysis", "convo_analysis_history")) {
+      val pinned = wh.read(t).schema.map(f => f.name -> f.dataType)
+      val inferred = spark.read.parquet(wh.currentPath(t)).schema.map(f => f.name -> f.dataType)
+      assert(pinned == inferred, s"$t: pinned $pinned, inference reports $inferred")
+    }
+  }
+
+  test("Warehouse append links: previous files inode-identical, rows the union, GC-safe, readAt intact") {
+    val dir = whDir("link")
+    val wh = new Warehouse(spark, dir)
+    wh.keepSnapshots = 2
+    wh.overwrite("t", Seq(("a", 1, "x"), ("b", 2, "y")).toDF("id", "v", "w"))
+    val s0 = wh.snapshots("t").last
+    val files0 = wh.dataFiles("t")
+    // a subset of the standing columns: `w` lands as a typed null
+    val batch = Seq(("c", 3)).toDF("id", "v")
+    val union = rowSet(wh.read("t").unionByName(batch, allowMissingColumns = true))
+    wh.append("t", batch)
+    val s1 = wh.snapshots("t").last
+    assert(s1 != s0)
+    files0.foreach { rel =>
+      assert(java.nio.file.Files.isSameFile(snapFile(dir, "t", s0, rel), snapFile(dir, "t", s1, rel)),
+        s"$rel was rewritten by append")
+    }
+    assert(wh.dataFiles("t").size > files0.size)
+    assert(rowSet(wh.read("t")) == union)
+    assert(rowSet(wh.read("t")) == Set(Seq("a", 1, "x"), Seq("b", 2, "y"), Seq("c", 3, null)))
+    // two more snapshots: GC (keep 2) deletes s0, whose files s1 linked
+    wh.append("t", Seq(("d", 4, "z")).toDF("id", "v", "w"))
+    assert(!wh.snapshots("t").contains(s0))
+    assert(wh.read("t").count() == 4, "linked files must outlive the snapshot that wrote them")
+    assert(rowSet(wh.readAt("t", s1)) == union)
+  }
+
+  test("Warehouse append: a new column or a changed type rewrites through unionByName") {
+    val dir = whDir("rewrite")
+    val wh = new Warehouse(spark, dir)
+    wh.overwrite("t", Seq(("a", 1)).toDF("id", "v"))
+    def nothingLinked(): Unit = {
+      val snap = wh.snapshots("t").last
+      wh.dataFiles("t").foreach { rel =>
+        assert(java.nio.file.Files.getAttribute(snapFile(dir, "t", snap, rel), "unix:nlink") == 1,
+          s"$rel is a carried-over link; a schema change must rewrite")
+      }
+    }
+    val wider = Seq(("b", 2, "e")).toDF("id", "v", "extra")
+    val expectWider = wh.read("t").unionByName(wider, allowMissingColumns = true)
+    val wantWider = (expectWider.schema.map(f => f.name -> f.dataType), rowSet(expectWider))
+    wh.append("t", wider)
+    assert((wh.read("t").schema.map(f => f.name -> f.dataType), rowSet(wh.read("t"))) == wantWider)
+    nothingLinked()
+    val retyped = Seq(("c", 3L, "f")).toDF("id", "v", "extra")
+    val expectRetyped = wh.read("t").unionByName(retyped, allowMissingColumns = true)
+    val wantRetyped = (expectRetyped.schema.map(f => f.name -> f.dataType), rowSet(expectRetyped))
+    wh.append("t", retyped)
+    assert((wh.read("t").schema.map(f => f.name -> f.dataType), rowSet(wh.read("t"))) == wantRetyped)
+    assert(wh.read("t").schema("v").dataType == org.apache.spark.sql.types.LongType)
+    nothingLinked()
+  }
+
+  test("Warehouse append keeps a partitioned table partitioned; the next scoped upsert needs no migration") {
+    val dir = whDir("part-append")
+    val wh = new Warehouse(spark, dir)
+    wh.overwritePartitioned("ev",
+      Seq(("2024-01-01", 1L, 10.0), ("2024-01-02", 2L, 20.0)).toDF("dt", "id", "v"), Seq("dt"))
+    val s0 = wh.snapshots("ev").last
+    val files0 = wh.dataFiles("ev")
+    val batch = Seq(("2024-01-02", 3L, 30.0), ("2024-01-03", 4L, 40.0)).toDF("dt", "id", "v")
+    val union = rowSet(wh.read("ev").unionByName(batch))
+    wh.append("ev", batch)
+    val s1 = wh.snapshots("ev").last
+    assert(wh.dataFiles("ev").forall(_.startsWith("dt=")),
+      s"append flattened the partitioned table: ${wh.dataFiles("ev")}")
+    files0.foreach { rel =>
+      assert(java.nio.file.Files.isSameFile(snapFile(dir, "ev", s0, rel), snapFile(dir, "ev", s1, rel)))
+    }
+    assert(rowSet(wh.read("ev")) == union)
+    // the pin keeps the written type of a partition column; inference
+    // would turn these date-shaped strings into a date
+    assert(wh.read("ev").schema("dt").dataType == org.apache.spark.sql.types.StringType)
+    assert(spark.read.parquet(wh.currentPath("ev")).schema("dt").dataType ==
+      org.apache.spark.sql.types.DateType)
+    val q = wh.read("ev").where(col("dt") === "2024-01-03")
+    assert(q.count() == 1)
+    assert(q.queryExecution.executedPlan.collectLeaves().collectFirst {
+      case s: org.apache.spark.sql.execution.FileSourceScanExec => s.partitionFilters.nonEmpty
+    }.contains(true), "appended partition must prune")
+    // the scoped MERGE takes its linked path: dt=2024-01-01 is carried over,
+    // not rewritten by a layout migration
+    wh.upsertPartitioned("ev", Seq(("2024-01-03", 4L, 44.0)).toDF("dt", "id", "v"),
+      "id", Seq("v"), Seq("dt"))
+    val s2 = wh.snapshots("ev").last
+    files0.filter(_.startsWith("dt=2024-01-01")).foreach { rel =>
+      assert(java.nio.file.Files.isSameFile(snapFile(dir, "ev", s0, rel), snapFile(dir, "ev", s2, rel)),
+        s"$rel was rewritten: the upsert after append migrated the layout")
+    }
+    assert(wh.read("ev").where(col("id") === 4L).select("v").as[Double].collect().toSeq == Seq(44.0))
+  }
+
   // ---- A6 convo -----------------------------------------------------
 
   test("A6 conversation assembly: ordered, rendered, joined") {

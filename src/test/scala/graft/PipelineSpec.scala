@@ -20,6 +20,29 @@ private final class LastAddressLlm extends LlmGateway {
   }
 }
 
+/** Gateway calls per tag, JVM-wide: tasks call a deserialized copy of the
+  * gateway, so the count cannot live on the instance.
+  */
+private object GatewayCalls {
+  private val calls = new java.util.concurrent.ConcurrentHashMap[String,
+    java.util.concurrent.atomic.AtomicInteger]()
+  def hit(tag: String): Int =
+    calls.computeIfAbsent(tag, _ => new java.util.concurrent.atomic.AtomicInteger).incrementAndGet()
+  def of(tag: String): Int = Option(calls.get(tag)).map(_.get).getOrElse(0)
+}
+
+/** Counts its calls and answers differently on every one, as a model
+  * sampled at temperature 0.8 does: the summary names the call.
+  */
+private final class SampledLlm(tag: String) extends LlmGateway {
+  private val mock = new MockLlmGateway
+  override def extract(conversation: String): graft.llm.LlmResult = {
+    val n = GatewayCalls.hit(tag)
+    val r = mock.extract(conversation)
+    r.copy(fields = r.fields.updated("summary", s"answer $n"))
+  }
+}
+
 class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
@@ -292,6 +315,25 @@ class PipelineSpec extends AnyFunSuite {
     assert(api.calls.size == 1)
   }
 
+  test("X3 refreshUsers: the maxPointFetches guard fires before any point fetch") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-users-guard").toString
+    val wh = new Warehouse(spark, dir)
+    val api = new CountingApi(new FixtureApi(Map(
+      "users/U1" -> Seq(Seq("""{"name":"Uno","email":"u1@x.ph"}""")),
+      "users/U2" -> Seq(Seq("""{"name":"Dos","email":"u2@x.ph"}""")),
+      "users/U3" -> Seq(Seq("""{"name":"Tres","email":"u3@x.ph"}""")))))
+    val p = new Pipelines(spark, wh, api, new MockLlmGateway)
+    val agents = Seq(("A1", "Alice")).toDF("id", "name")
+    val flat = Seq(("U1", "A1"), ("U2", "A1"), ("U3", "A1")).toDF("userid", "agentid")
+    val e = intercept[IllegalArgumentException](p.refreshUsers(flat, agents, maxPointFetches = 2))
+    assert(e.getMessage.contains("maxPointFetches"))
+    assert(api.calls.isEmpty, "the guard must fire before any point fetch")
+    assert(!wh.exists("users"))
+    // exactly at the bound: every miss fetched
+    assert(p.refreshUsers(flat, agents, maxPointFetches = 3) == 3)
+    assert(api.calls.size == 3)
+  }
+
   test("§3.1 end-to-end: recent keys → keyed fetch → flatten → enrich → append") {
     val dir = java.nio.file.Files.createTempDirectory("graft-e2e").toString
     val wh = new Warehouse(spark, dir)
@@ -392,6 +434,62 @@ class PipelineSpec extends AnyFunSuite {
     // second run: T1's customer corrects the address to an unserviced city
     run(msgs(first.take(1) :+ (("T1", "Address: cebu city", "2024-01-02 09:00:00")): _*))
     assert(flags == Seq(("T1", "cebu city", "No"), ("T2", "quezon city", "Yes")))
+  }
+
+  test("convo analysis calls the gateway once per conversation; history and current rows agree") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-llm-once").toString
+    val wh = new Warehouse(spark, dir)
+    val tag = s"llm-once-${System.nanoTime()}"
+    val p = new Pipelines(spark, wh, fixtureApi, new SampledLlm(tag))
+    val ref = Seq("quezon city", "makati").toDF("ref_name")
+    val svc = Seq("quezon city").toDF("svc_name")
+    val msgs = Seq(
+        ("T1", "Address: quezon city", "2024-01-01 10:00:00"),
+        ("T1", "thanks", "2024-01-01 10:05:00"),
+        ("T2", "Address: makati", "2024-01-01 11:00:00"),
+        ("T3", "no address given", "2024-01-01 12:00:00"))
+      .toDF("ticket_id", "message", "datecreated")
+      .withColumn("sender_type", lit("client"))
+      .withColumn("datecreated", to_timestamp(col("datecreated")))
+    assert(p.processConvos(msgs, ref, "ref_name", svc, "svc_name",
+      graft.pipeline.ColumnContracts.ConvoUpdateColumns) == 3)
+    assert(GatewayCalls.of(tag) == 3, s"3 conversations, ${GatewayCalls.of(tag)} gateway calls")
+    def rows(t: String) = {
+      val df = wh.read(t)
+      df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toSeq).toSet
+    }
+    assert(rows("convo_analysis_history") == rows("convo_analysis"),
+      "the history row and the current row must carry the same answer")
+    assert(rows("convo_analysis").size == 3)
+  }
+
+  test("route pins are released: a full window leaves no persisted RDD behind") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-pins").toString
+    val wh = new Warehouse(spark, dir)
+    val api = new FixtureApi(Map(
+      "agents" -> Seq(Seq("""{"id":"A1","name":"Alice"}""")),
+      "tickets" -> Seq(Seq(
+        """{"id":"T1","subject":"s1","owner_name":"Owen","agentid":"A1","date_created":"2024-01-01 02:00:00"}""")),
+      "tickets/T1/messages" -> Seq(Seq(
+        """{"id":"g1","userid":"C7","messages":[{"id":"m1","message":"Address: makati","datecreated":"2024-01-01 10:00:00"}]}""")),
+      "users/C7" -> Seq(Seq("""{"name":"Cara","email":"c@x.ph"}"""))))
+    val p = new Pipelines(spark, wh, api, new LastAddressLlm)
+    // the context tracks persisted RDDs weakly, so RDDs of earlier specs
+    // may vanish at any GC: count only the ones created since `before`
+    val before = spark.sparkContext.getPersistentRDDs.keySet
+    p.refreshAgents()
+    val runTs = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
+    assert(p.processTickets("date_created", "2024-01-01", "2024-02-01", runTs,
+      graft.pipeline.ColumnContracts.TicketsUpdateColumns) == 1)
+    assert(p.processTicketMessages(Seq(TicketRef("T1"))) == 1)
+    val msgs = wh.read("messages").select(col("ticket_id"), col("sender_type"),
+      col("message"), col("message_datecreated").as("datecreated"))
+    assert(p.processConvos(msgs, Seq("makati").toDF("ref_name"), "ref_name",
+      Seq("makati").toDF("svc_name"), "svc_name",
+      graft.pipeline.ColumnContracts.ConvoUpdateColumns, runTs) == 1)
+    assert(p.metrics(Seq("T1").toDF("ticket_id"), "convo_analysis", "ticket_id") == ((0L, 1L)))
+    val left = spark.sparkContext.getPersistentRDDs.keySet -- before
+    assert(left.isEmpty, s"persisted RDDs left behind by the window: $left")
   }
 
   test("convo MERGE asymmetry: contact_num/payment staged but never updated") {

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 
 /** One shared local session for the whole test JVM. */
@@ -17,5 +18,31 @@ object SparkTestBase {
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
+  }
+
+  /** Jobs launched while `body` runs. A sentinel RDD count (exactly one
+    * job) flushes the listener bus: events arrive in order, so once the
+    * sentinel is seen every job `body` launched has been counted.
+    */
+  def jobsDuring(body: => Unit): Int = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
+    val sentinel = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (j.properties != null && j.properties.getProperty("tables.sentinel") != null)
+          sentinel.set(true)
+        else jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      spark.sparkContext.setLocalProperty("tables.sentinel", "1")
+      try spark.sparkContext.parallelize(Seq(1)).count()
+      finally spark.sparkContext.setLocalProperty("tables.sentinel", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!sentinel.get() && System.nanoTime() < deadline) Thread.sleep(10)
+      assert(sentinel.get(), "listener bus never delivered the sentinel job")
+      jobs.get()
+    } finally spark.sparkContext.removeSparkListener(listener)
   }
 }

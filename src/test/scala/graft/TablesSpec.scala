@@ -1,7 +1,6 @@
 package graft
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.types.{LongType, StringType, TimestampType}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -13,39 +12,13 @@ class TablesSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   private val dir = "/root/testdata/sf0.001"
 
-  /** Jobs launched while `body` runs. A sentinel RDD count (exactly one
-    * job) flushes the listener bus: events arrive in order, so once the
-    * sentinel is seen every job `body` launched has been counted.
-    */
-  private def jobsDuring(body: => Unit): Int = {
-    val jobs = new java.util.concurrent.atomic.AtomicInteger(0)
-    val sentinel = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        if (j.properties != null && j.properties.getProperty("tables.sentinel") != null)
-          sentinel.set(true)
-        else jobs.incrementAndGet()
-    }
-    spark.sparkContext.addSparkListener(listener)
-    try {
-      body
-      spark.sparkContext.setLocalProperty("tables.sentinel", "1")
-      try spark.sparkContext.parallelize(Seq(1)).count()
-      finally spark.sparkContext.setLocalProperty("tables.sentinel", null)
-      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
-      while (!sentinel.get() && System.nanoTime() < deadline) Thread.sleep(10)
-      assert(sentinel.get(), "listener bus never delivered the sentinel job")
-      jobs.get()
-    } finally spark.sparkContext.removeSparkListener(listener)
-  }
-
   private def tempDir(): String =
     Files.createTempDirectory("graft_tables").toString
 
   test("a load launches no Spark job, the first one included") {
     val tmp = tempDir()
     Files.copy(Paths.get(dir, "orders.parquet"), Paths.get(tmp, "orders.parquet"))
-    val n = jobsDuring {
+    val n = SparkTestBase.jobsDuring {
       val first = Tables.load(spark, tmp, "orders")
       val second = Tables.load(spark, tmp, "orders")
       assert(first.schema == second.schema && first.schema.nonEmpty)
