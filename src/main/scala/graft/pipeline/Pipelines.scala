@@ -156,8 +156,13 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
             Seq("message_id"), "left_anti")
         else batch
       } else coded
-    wh.append("messages", out)
-    out.count()
+    // the append runs the batch's plan once and the observation counts its
+    // rows on the way, so no second pass re-runs the enrichment and dedupe
+    // joins. `get` blocks until the observed plan has run: read it only
+    // after the write.
+    val (observedOut, written) = Pipelines.observed(out, "message_id")
+    wh.append("messages", observedOut)
+    written.get("n_rows").asInstanceOf[Long]
   }
 
   /** §3.1 middle leg, end-to-end (S5+S6+J3+J4): recent ticket keys →
@@ -271,14 +276,19 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
   }
 
   /** Metrics job (A1 + A8/J9/J10): new vs existing key counts and grouped
-    * totals — `ExtractionLogger.py:95-176`.
+    * totals — `ExtractionLogger.py:95-176`. One pass: each run-key row
+    * meets at most one standing key (the standing keys are made distinct),
+    * so the left join keeps the run's multiplicity and the hit flag splits
+    * it — the counts a `left_anti` and a `left_semi` count return, null run
+    * keys counted as new.
     */
   def metrics(runKeys: DataFrame, table: String, key: String): (Long, Long) = {
     if (!wh.exists(table)) return (runKeys.count(), 0L)
-    val existing = wh.read(table).select(col(key))
-    val newCnt = runKeys.join(existing, Seq(key), "left_anti").count()
-    val updCnt = runKeys.join(existing, Seq(key), "left_semi").count()
-    (newCnt, updCnt)
+    val hit = "__standing_hit"
+    val standing = wh.read(table).select(col(key)).distinct().withColumn(hit, lit(true))
+    val r = runKeys.join(standing, Seq(key), "left")
+      .agg(count_if(col(hit).isNull), count_if(col(hit).isNotNull)).head()
+    (r.getLong(0), r.getLong(1))
   }
 }
 
@@ -295,14 +305,16 @@ object Pipelines {
     * COUNT queries; at scale a second pass over the input is a second
     * 100 TB scan. `Observation` piggybacks the metrics on the job that
     * already runs: attach before the sink, read after the action
-    * completes — zero extra jobs.
+    * completes — zero extra jobs. `null_keys` is reported only when `df`
+    * has `keyCol` (a message batch whose messages carry no fields has no
+    * `message_id`).
     */
   def observed(df: DataFrame, keyCol: String)
       : (DataFrame, org.apache.spark.sql.Observation) = {
     val obs = new org.apache.spark.sql.Observation()
-    val tagged = df.observe(obs,
-      count(lit(1)).as("n_rows"),
-      count_if(col(keyCol).isNull).as("null_keys"))
-    (tagged, obs)
+    val nullKeys =
+      if (df.columns.contains(keyCol)) Seq(count_if(col(keyCol).isNull).as("null_keys"))
+      else Nil
+    (df.observe(obs, count(lit(1)).as("n_rows"), nullKeys: _*), obs)
   }
 }

@@ -129,11 +129,10 @@ object SemiStructuredQueries {
              array_to_string(map_keys(m), ',') AS keys_csv
       FROM mm ORDER BY c_custkey""")),
 
-    // Binary (multimodal payload) columns flowing through the engine with
-    // exact parity: cast→bytes, octet length, hex, base64 round trip.
-    // The multimodal pipeline treats media as opaque binary + typed
-    // metadata (graft.multimodal); this proves the binary column type
-    // itself survives scans, projections, and codecs bit-exactly.
+    // Binary (opaque payload) columns flowing through the engine with
+    // exact parity: cast→bytes, octet length, hex, base64 round trip —
+    // the binary column type survives scans, projections, and codecs
+    // bit-exactly.
     QueryDef("multimodal_binary_roundtrip", (s, dir) => {
       t("documents")(s, dir).select(
           col("doc_id"),

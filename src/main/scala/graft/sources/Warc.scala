@@ -9,10 +9,9 @@ import org.apache.spark.sql.functions._
   * for web-scrape corpora (Common Crawl ships ~100 TB per crawl as
   * `.warc.gz`), and therefore the entry point a training-data pipeline
   * at this engine's target scale actually reads. The reference pipeline
-  * has no web-scrape ingestion; this is a framework-native source in
-  * the same spirit as the multimodal decoders: parse the public format
-  * exactly, degrade malformed data honestly, keep the Spark surface
-  * declarative.
+  * has no web-scrape ingestion; this is a framework-native source:
+  * parse the public format exactly, degrade malformed data honestly,
+  * keep the Spark surface declarative.
   *
   * Scale shape: one task per WARC file (the Common Crawl layout is
   * ~1 GB per file, hundreds of thousands of files per crawl), driven by

@@ -403,6 +403,93 @@ class PipelineSpec extends AnyFunSuite {
     assert(fresh.processMessages(groups, dedupe = true) == 2)
   }
 
+  /** Short call sites (`count at Pipelines.scala:<line>`) of the jobs `body`
+    * launches. A job inside a SQL execution takes the execution's call
+    * site: AQE launches a query's stage jobs from its own threads, whose
+    * stacks name no caller. Any other job takes its result stage's name.
+    */
+  private def jobSitesDuring(body: => Unit): Seq[String] = {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.SQLExecution
+    import org.apache.spark.sql.execution.ui.SparkListenerSQLExecutionStart
+    val executions = new java.util.concurrent.ConcurrentHashMap[String, String]()
+    val jobs = new java.util.concurrent.ConcurrentLinkedQueue[Either[String, String]]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case s: SparkListenerSQLExecutionStart =>
+          executions.put(s.executionId.toString, s.description)
+        case _ =>
+      }
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        jobs.add(Option(j.properties)
+          .flatMap(p => Option(p.getProperty(SQLExecution.EXECUTION_ID_KEY)))
+          .toLeft(j.stageInfos.maxByOption(_.stageId).map(_.name).getOrElse("")))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try SparkTestBase.jobsDuring(body)
+    finally spark.sparkContext.removeSparkListener(listener)
+    scala.jdk.CollectionConverters.CollectionHasAsScala(jobs).asScala.toSeq
+      .map(_.fold(executions.getOrDefault(_, ""), identity))
+  }
+
+  test("processMessages counts its batch from the append, without a count job") {
+    def batch(ids: String*) = Seq(("g1", "T1", ids.map(id => (id, s"text $id"))))
+      .toDF("id", "ticket_id", "messages")
+      .withColumn("messages", transform(col("messages"),
+        m => struct(m.getField("_1").as("id"), m.getField("_2").as("message"))))
+    val groups = batch("m1", "m1", "m2")
+    def appended(wh: Warehouse, dedupe: Boolean, g: org.apache.spark.sql.DataFrame = groups): Long = {
+      val p = new Pipelines(spark, wh, fixtureApi, new MockLlmGateway)
+      val before = if (wh.exists("messages")) wh.read("messages").count() else 0L
+      var n = -1L
+      val sites = jobSitesDuring { n = p.processMessages(g, dedupe) }
+      assert(sites.nonEmpty, "no job carried a call site")
+      assert(!sites.exists(_.startsWith("count at Pipelines.scala")),
+        s"processMessages re-ran its batch to count it: $sites")
+      assert(n == wh.read("messages").count() - before)
+      n
+    }
+    def whAt(tag: String) =
+      new Warehouse(spark, java.nio.file.Files.createTempDirectory(s"graft-obs-$tag").toString)
+
+    // linked append: the standing schema already holds every batch column
+    val linked = whAt("linked")
+    assert(appended(linked, dedupe = false) == 3) // first write: overwrite
+    assert(appended(linked, dedupe = false) == 3)
+    assert(appended(linked, dedupe = true, batch("m2", "m3", "m3")) == 1)
+    assert(appended(linked, dedupe = true) == 0)
+
+    // rewrite append: batch columns the standing table lacks force the
+    // unionByName rewrite
+    def legacy(tag: String) = {
+      val wh = whAt(tag)
+      wh.overwrite("messages", Seq(("m0", 7)).toDF("message_id", "legacy"))
+      wh
+    }
+    assert(appended(legacy("rewrite"), dedupe = false) == 3)
+    val rewrittenDedupe = legacy("rewrite-dedupe")
+    assert(appended(rewrittenDedupe, dedupe = true, batch("m0", "m1", "m1")) == 1)
+    assert(rewrittenDedupe.read("messages").columns.contains("legacy"))
+
+    // groups without messages flatten to no message_id; rows still count
+    val bare = Seq(("g9", "T9")).toDF("id", "ticket_id")
+      .withColumn("messages", array().cast("array<string>"))
+    assert(appended(whAt("bare"), dedupe = false, bare) == 1)
+  }
+
+  test("metrics: one pass gives the two-join counts for duplicate and null keys") {
+    val wh = new Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-metrics").toString)
+    wh.overwrite("t", Seq(Some("K1"), Some("K1"), Some("K2"), None).toDF("k"))
+    val p = new Pipelines(spark, wh, fixtureApi, new MockLlmGateway)
+    val run = Seq(Some("K1"), Some("K1"), Some("K3"), None, Some("K2"), Some("K3")).toDF("k")
+    val standing = wh.read("t")
+    val twoJoins = (run.join(standing, Seq("k"), "left_anti").count(),
+      run.join(standing, Seq("k"), "left_semi").count())
+    assert(twoJoins == ((3L, 3L)))
+    assert(p.metrics(run, "t", "k") == twoJoins)
+  }
+
   test("rate limiter: enforces launch spacing") {
     val rl = new RateLimiter(2, 30)
     val t0 = System.nanoTime()
