@@ -61,6 +61,8 @@ def df_cells(df):
 
 
 def main():
+    # one line at a time, also when piped: a long run shows where it is
+    sys.stdout.reconfigure(line_buffering=True)
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     # optional sharding for big-SF runs: --shard i/N checks every Nth query
     # (by sorted position), so N parallel processes split the gate; each
@@ -86,12 +88,12 @@ def main():
             path = f"{path}/*.parquet"
         con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{path}'")
     oracles = json.load(open(f"{out_dir}/oracle_sql.json"))
+    mine = [n for qi, n in enumerate(sorted(oracles)) if qi % shard_n == shard_i
+            and (only is None or n in only)]
+    print(f"shard {shard_i}/{shard_n}: checking {len(mine)} of {len(oracles)} queries")
     failures = 0
-    for qi, (name, sql) in enumerate(sorted(oracles.items())):
-        if qi % shard_n != shard_i:
-            continue
-        if only is not None and name not in only:
-            continue
+    for name in mine:
+        sql = oracles[name]
         try:
             got = con.execute(
                 f"SELECT * FROM '{out_dir}/{name}/*.parquet'")
@@ -152,10 +154,8 @@ def main():
             failures += 1
             continue
         note = f" ({tol} float cells matched only under tolerance)" if tol else ""
-        print(f"PASS {name}: {len(grows)} rows{note}", flush=True)
-    checked = len([q for i, q in enumerate(sorted(oracles))
-                   if i % shard_n == shard_i
-                   and (only is None or q in only)])
+        print(f"PASS {name}: {len(grows)} rows{note}")
+    checked = len(mine)
     print(f"\n{checked - failures}/{checked} queries pass"
           + (f" (shard {shard_i}/{shard_n})" if shard_n > 1 else ""))
     sys.exit(1 if failures else 0)

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import graft.functions.{TextFns, TimeFns}
 import graft.llm.{LlmExtract, LlmGateway}
 import graft.operators.{Convo, FrontCache, GeocodeJoin, Warehouse}
+import graft.plans.Interpreted
 import graft.sources.{LiveAgentApi, LiveAgentSource, RateLimiter, TicketRef}
 
 /** The three §3 lifecycles as composable jobs over a Warehouse, plus the
@@ -17,6 +18,15 @@ import graft.sources.{LiveAgentApi, LiveAgentSource, RateLimiter, TicketRef}
   * released before the route returns. Without the pin each action re-ran
   * the batch's whole upstream plan — the source parse, the enrichment
   * joins, and in [[processConvos]] the LLM gateway call per conversation.
+  * A route's row count is observed on that one evaluation or on its write
+  * ([[counted]]), never taken by a second pass.
+  *
+  * Each route runs [[graft.plans.Interpreted]] when its inputs are small:
+  * the bytes of the API pages it fetched, the sizes Catalyst holds for the
+  * caller's frames and the data-file bytes of the warehouse snapshots it
+  * reads ([[gated]]). The choice is made once per route call, before the
+  * route's first Spark execution; a route called inside another keeps the
+  * outer choice.
   */
 final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
                       llm: LlmGateway,
@@ -34,25 +44,46 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     finally pinned.foreach(FrontCache.release)
   }
 
+  /** Run `action` on `df` with its rows counted on the way. The count is
+    * observed on the plan `action` runs, which must run `df`'s plan
+    * exactly once (a pin or a write), so no second pass re-runs the batch.
+    */
+  private def counted[A](df: DataFrame, keyCol: String)(action: DataFrame => A): (A, Long) = {
+    val (observedDf, obs) = Pipelines.observed(df, keyCol)
+    val a = action(observedDf)
+    // `get` blocks until the observed plan has run
+    (a, obs.get("n_rows").asInstanceOf[Long])
+  }
+
+  /** Run a route's `body` interpreted when its inputs are small:
+    * `fetched` bytes of API pages, the caller's `frames`, and the current
+    * snapshots of the warehouse `tables` the route reads.
+    */
+  private def gated[T](fetched: Long, frames: Seq[DataFrame], tables: String*)(body: => T): T =
+    Interpreted.when(spark, Interpreted.small(fetched + tables.map(wh.bytes).sum, frames))(body)
+
   /** §3.3 — dimension refresh: fetch + tz-normalize + truncate-overwrite. */
   def refreshAgents(): Long = {
-    val raw = LiveAgentSource.paginate(spark, api, "agents")
-    if (raw.isEmpty) return 0L
-    val processed =
-      if (raw.columns.contains("last_pswd_change"))
-        raw.withColumn("last_pswd_change",
-          TimeFns.parseToManila(col("last_pswd_change")).cast("timestamp_ntz"))
-      else raw
-    wh.overwrite("agents", processed)
-    processed.count()
+    val rows = LiveAgentSource.fetchPages(api, "agents")
+    if (rows.isEmpty) return 0L
+    gated(LiveAgentSource.fetchedBytes(rows), Nil) {
+      val raw = LiveAgentSource.json(spark, rows)
+      val processed =
+        if (raw.columns.contains("last_pswd_change"))
+          raw.withColumn("last_pswd_change",
+            TimeFns.parseToManila(col("last_pswd_change")).cast("timestamp_ntz"))
+        else raw
+      counted(processed, "id")(wh.overwrite("agents", _))._2
+    }
   }
 
   def refreshTags(): Long = {
-    val raw = LiveAgentSource.paginate(spark, api, "tags")
-    if (raw.isEmpty) return 0L
-    val filled = raw.na.fill("").na.fill(0)
-    wh.overwrite("tags", filled)
-    filled.count()
+    val rows = LiveAgentSource.fetchPages(api, "tags")
+    if (rows.isEmpty) return 0L
+    gated(LiveAgentSource.fetchedBytes(rows), Nil) {
+      val filled = LiveAgentSource.json(spark, rows).na.fill("").na.fill(0)
+      counted(filled, "id")(wh.overwrite("tags", _))._2
+    }
   }
 
   /** §3.1 — tickets + messages: fetch window → transform → upsert tickets
@@ -76,17 +107,18 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
   def processTickets(windowField: String, start: String, end: String,
                      runTs: java.sql.Timestamp,
                      updateCols: Seq[String]): Long = {
-    val raw = LiveAgentSource.paginate(spark, api, "tickets",
+    val rows = LiveAgentSource.fetchPages(api, "tickets",
       LiveAgentSource.windowFilters(windowField, start, end))
-    if (raw.isEmpty) return 0L
-    withPins { pin =>
-      var t = LiveAgentSource.processTickets(raw)
+    if (rows.isEmpty) return 0L
+    gated(LiveAgentSource.fetchedBytes(rows), Nil, "tickets")(withPins { pin =>
+      var t = LiveAgentSource.processTickets(LiveAgentSource.json(spark, rows))
         .withColumn("datetime_extracted", lit(runTs).cast("timestamp_ntz"))
       for (c <- Seq("date_created", "date_changed", "date_resolved") if t.columns.contains(c))
         t = t.withColumn(c, TimeFns.parseToManila(col(c)).cast("timestamp_ntz"))
       if (t.columns.contains("custom_fields"))
         t = t.withColumn("custom_fields", TextFns.singleElementOrNull(col("custom_fields")))
-      t = pin(t)
+      val (pinned, n) = counted(t, "id")(pin)
+      t = pinned
       val standingCols =
         if (wh.exists("tickets")) wh.read("tickets").columns.toSeq else Nil
       if (t.columns.contains("date_created") &&
@@ -109,8 +141,8 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
         // degenerate feed or standing table without a creation time: no
         // stable partition column exists, fall back to the whole-table merge
         wh.upsert("tickets", t, "id", updateCols)
-      t.count()
-    }
+      n
+    })
   }
 
   /** Messages leg, TicketMessageProcessor parity
@@ -127,7 +159,9 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * one key-projected scan, no full-table rewrite) and within-batch
     * re-deliveries. Default stays reference-exact.
     */
-  def processMessages(groups: DataFrame, dedupe: Boolean = false): Long = withPins { pin =>
+  def processMessages(groups: DataFrame, dedupe: Boolean = false): Long =
+    gated(0L, Seq(groups), Seq("agents", "users") ++ (if (dedupe) Seq("messages") else Nil): _*)(
+      withPins { pin =>
     // the reference keeps the inner body's plain name — every other inner
     // field gets the message_ prefix (`core/Ticket.py:170-181`)
     val flat0 = LiveAgentSource.flattenMessageGroups(groups)
@@ -156,14 +190,10 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
             Seq("message_id"), "left_anti")
         else batch
       } else coded
-    // the append runs the batch's plan once and the observation counts its
-    // rows on the way, so no second pass re-runs the enrichment and dedupe
-    // joins. `get` blocks until the observed plan has run: read it only
-    // after the write.
-    val (observedOut, written) = Pipelines.observed(out, "message_id")
-    wh.append("messages", observedOut)
-    written.get("n_rows").asInstanceOf[Long]
-  }
+    // counted on the append, so no second pass re-runs the enrichment and
+    // dedupe joins
+    counted(out, "message_id")(wh.append("messages", _))._2
+  })
 
   /** §3.1 middle leg, end-to-end (S5+S6+J3+J4): recent ticket keys →
     * per-key message fetch under the rate limiter → flatten → enrich →
@@ -173,21 +203,26 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     */
   def processTicketMessages(tickets: Seq[TicketRef],
                             maxPagesPerTicket: Int = LiveAgentSource.MaxPages): Long = {
-    val cache =
-      if (wh.exists("tickets")) {
-        val t = wh.read("tickets")
-        // processTickets defaults these columns, but a hand-loaded tickets
-        // table may lack them — no cache beats an AnalysisException
-        if (Seq("id", "owner_name", "agentid").forall(t.columns.contains))
-          Some(t.select(col("id").as("ticket_id"),
-            col("owner_name"), col("agentid")))
-        else None
-      } else None
-    val groups = LiveAgentSource.fetchTicketMessages(spark, api, tickets,
-      limiter, maxPagesPerTicket, cache)
-    if (groups.isEmpty) return 0L
-    processMessages(groups)
+    val rows = LiveAgentSource.fetchTicketMessageRows(api, tickets, limiter, maxPagesPerTicket)
+    if (rows.isEmpty) return 0L
+    gated(LiveAgentSource.fetchedBytes(rows), Nil, "tickets", "agents", "users") {
+      processMessages(LiveAgentSource.ticketMessageGroups(spark, rows, ticketCache()))
+    }
   }
+
+  /** The ticket metadata cache: the warehouse `tickets` table, when it
+    * holds the cached fields.
+    */
+  private def ticketCache(): Option[DataFrame] =
+    if (wh.exists("tickets")) {
+      val t = wh.read("tickets")
+      // processTickets defaults these columns, but a hand-loaded tickets
+      // table may lack them — no cache beats an AnalysisException
+      if (Seq("id", "owner_name", "agentid").forall(t.columns.contains))
+        Some(t.select(col("id").as("ticket_id"),
+          col("owner_name"), col("agentid")))
+      else None
+    } else None
 
   /** X3 — users-dimension refresh from a message batch
     * (`TicketMessageProcessor.py:24-37,63-194`): distinct candidate ids
@@ -202,7 +237,11 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * newly fetched users.
     */
   def refreshUsers(flat: DataFrame, agents: DataFrame,
-                   maxPointFetches: Long = 100000L): Long = {
+                   maxPointFetches: Long = 100000L): Long =
+    gated(0L, Seq(flat, agents), "users")(fetchMissingUsers(flat, agents, maxPointFetches))
+
+  private def fetchMissingUsers(flat: DataFrame, agents: DataFrame,
+                                maxPointFetches: Long): Long = {
     val idCols = Seq("userid", "message_userid", "agentid")
       .filter(flat.columns.contains)
     if (idCols.isEmpty) return 0L
@@ -224,11 +263,11 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
         "(maxPointFetches) — preload the users dimension before this batch")
     if (missIds.isEmpty) return 0L
     val fetched = LiveAgentSource.fetchUsers(spark, api, missIds, limiter)
-    if (fetched.isEmpty) return 0L
+    // no lookup resolved: the source returns a frame without columns
+    if (fetched.columns.isEmpty) return 0L
     val resolved = fetched.withColumn("name",
       MessageEnrich.resolvedUserName(col("name"), col("email")))
-    wh.upsert("users", resolved, "id", ColumnContracts.UsersUpdateColumns)
-    resolved.count()
+    counted(resolved, "id")(wh.upsert("users", _, "id", ColumnContracts.UsersUpdateColumns))._2
   }
 
   /** §3.2 — convo analysis: reassemble conversations (A6) → LLM extraction
@@ -241,7 +280,8 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
                     serviceable: DataFrame, svcNameCol: String,
                     updateCols: Seq[String],
                     runTs: java.sql.Timestamp =
-                      java.sql.Timestamp.valueOf("1970-01-01 00:00:00")): Long = withPins { pin =>
+                      java.sql.Timestamp.valueOf("1970-01-01 00:00:00")): Long =
+    gated(0L, Seq(messages, refTable, serviceable), "convo_analysis")(withPins { pin =>
     val convos = Convo.conversationText(messages)
     // pinned: the geocode branch and the join both read `analysis`, and
     // the gateway answer is not deterministic — one call per conversation,
@@ -269,11 +309,11 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
           .cast("timestamp_ntz"))
     val dropCols = Seq("score", "accepted", "input_address", "lat", "lng", "error") ++
       stamped.columns.filter(_.toLowerCase.contains("metadata"))
-    val fin = pin(stamped.drop(dropCols: _*))
+    val (fin, n) = counted(stamped.drop(dropCols: _*), "ticket_id")(pin)
     wh.append("convo_analysis_history", fin)
     wh.upsert("convo_analysis", fin, "ticket_id", updateCols)
-    fin.count()
-  }
+    n
+  })
 
   /** Metrics job (A1 + A8/J9/J10): new vs existing key counts and grouped
     * totals — `ExtractionLogger.py:95-176`. One pass: each run-key row
@@ -282,14 +322,17 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * it — the counts a `left_anti` and a `left_semi` count return, null run
     * keys counted as new.
     */
-  def metrics(runKeys: DataFrame, table: String, key: String): (Long, Long) = {
-    if (!wh.exists(table)) return (runKeys.count(), 0L)
-    val hit = "__standing_hit"
-    val standing = wh.read(table).select(col(key)).distinct().withColumn(hit, lit(true))
-    val r = runKeys.join(standing, Seq(key), "left")
-      .agg(count_if(col(hit).isNull), count_if(col(hit).isNotNull)).head()
-    (r.getLong(0), r.getLong(1))
-  }
+  def metrics(runKeys: DataFrame, table: String, key: String): (Long, Long) =
+    gated(0L, Seq(runKeys), table) {
+      if (!wh.exists(table)) (runKeys.count(), 0L)
+      else {
+        val hit = "__standing_hit"
+        val standing = wh.read(table).select(col(key)).distinct().withColumn(hit, lit(true))
+        val r = runKeys.join(standing, Seq(key), "left")
+          .agg(count_if(col(hit).isNull), count_if(col(hit).isNotNull)).head()
+        (r.getLong(0), r.getLong(1))
+      }
+    }
 }
 
 object Pipelines {

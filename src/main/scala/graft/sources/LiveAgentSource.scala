@@ -86,14 +86,14 @@ object LiveAgentSource {
   def windowFilters(field: String, start: String, end: String): Map[String, String] =
     Map("_filters" -> s"""[["$field","D>","$start"],["$field","D<=","$end"]]""")
 
-  /** S1 — generic page loop: fetch pages until empty/error/maxPages, then
-    * one spark.read.json over the accumulated rows.
+  /** S1 — generic page loop: the rows of the pages fetched until
+    * empty/error/maxPages. Driver-side, no Spark work.
     */
-  def paginate(spark: SparkSession, api: LiveAgentApi, endpoint: String,
-               filters: Map[String, String] = Map.empty,
-               limiter: Option[RateLimiter] = None,
-               maxPages: Int = MaxPages): DataFrame = {
-    val rows = Iterator.from(1).map { page =>
+  def fetchPages(api: LiveAgentApi, endpoint: String,
+                 filters: Map[String, String] = Map.empty,
+                 limiter: Option[RateLimiter] = None,
+                 maxPages: Int = MaxPages): Seq[String] =
+    Iterator.from(1).map { page =>
       limiter.foreach(_.acquire())
       try api.fetchPage(endpoint, page, PageSize, filters)
       finally limiter.foreach(_.release())
@@ -101,10 +101,25 @@ object LiveAgentSource {
       case Right(items) => items.nonEmpty
       case Left(_)      => false
     }.take(maxPages).collect { case Right(items) => items }.flatten.toSeq
+
+  /** Size of fetched JSON rows, one byte per character: the input size a
+    * route gates on ([[graft.plans.Interpreted]]).
+    */
+  def fetchedBytes(rows: Seq[String]): Long = rows.iterator.map(_.length.toLong).sum
+
+  /** One spark.read.json over fetched rows (an empty frame for none). */
+  def json(spark: SparkSession, rows: Seq[String]): DataFrame = {
     import spark.implicits._
     if (rows.isEmpty) spark.emptyDataFrame
     else spark.read.json(rows.toDS())
   }
+
+  /** [[fetchPages]], then [[json]]. */
+  def paginate(spark: SparkSession, api: LiveAgentApi, endpoint: String,
+               filters: Map[String, String] = Map.empty,
+               limiter: Option[RateLimiter] = None,
+               maxPages: Int = MaxPages): DataFrame =
+    json(spark, fetchPages(api, endpoint, filters, limiter, maxPages))
 
   /** S5 — keyed per-ticket message fetch (`core/Ticket.py:75-141`): page
     * `tickets/{id}/messages` for each recent ticket under the rate
@@ -122,8 +137,18 @@ object LiveAgentSource {
                           tickets: Seq[TicketRef],
                           limiter: Option[RateLimiter] = None,
                           maxPagesPerTicket: Int = MaxPages,
-                          metadataCache: Option[DataFrame] = None): DataFrame = {
-    val wrapped = tickets.flatMap { t =>
+                          metadataCache: Option[DataFrame] = None): DataFrame =
+    ticketMessageGroups(spark,
+      fetchTicketMessageRows(api, tickets, limiter, maxPagesPerTicket), metadataCache)
+
+  /** The fetch half of [[fetchTicketMessages]]: one JSON row per message
+    * group, the group wrapped with its ticket key and fallback args.
+    * Driver-side, no Spark work.
+    */
+  def fetchTicketMessageRows(api: LiveAgentApi, tickets: Seq[TicketRef],
+                             limiter: Option[RateLimiter] = None,
+                             maxPagesPerTicket: Int = MaxPages): Seq[String] =
+    tickets.flatMap { t =>
       // a failed page drops the WHOLE ticket, not just the suffix — the
       // reference's per-ticket catch returns [] for the entire ticket
       // (`core/Ticket.py:125-132`), so a fetch error can't leave a
@@ -145,9 +170,14 @@ object LiveAgentSource {
           s""""__fb_owner":${jstr(t.ownerName.orNull)},"group":$json}"""
       }.toSeq
     }
+
+  /** The frame half of [[fetchTicketMessages]]: unwrap the fetched rows
+    * and merge the ticket metadata.
+    */
+  def ticketMessageGroups(spark: SparkSession, wrapped: Seq[String],
+                          metadataCache: Option[DataFrame] = None): DataFrame = {
     if (wrapped.isEmpty) return spark.emptyDataFrame
-    import spark.implicits._
-    val raw = spark.read.json(wrapped.toDS())
+    val raw = json(spark, wrapped)
     // envelope keys win over same-named group fields (the reference's
     // base_info overwrites them when flattening, Ticket.py:149-166) — and
     // a duplicate column name here would make every later reference
@@ -209,8 +239,7 @@ object LiveAgentSource {
       }
     }.toSeq
     if (wrapped.isEmpty) return spark.emptyDataFrame
-    import spark.implicits._
-    val raw = spark.read.json(wrapped.toDS())
+    val raw = json(spark, wrapped)
     val userFields = raw.schema("user").dataType match {
       case st: org.apache.spark.sql.types.StructType => st.fieldNames.toSet
       case _ => Set.empty[String]

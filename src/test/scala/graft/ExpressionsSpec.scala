@@ -243,4 +243,83 @@ class ExpressionsSpec extends AnyFunSuite {
         graft.expressions.NfcNormalize($"text").as("n1"))
     assert(df.where($"n1" =!= $"n2").count() == 0, "not idempotent")
   }
+
+  /** Rows of `q` built and run inside an [[graft.plans.Interpreted]] block,
+    * and built and run as usual, each with whether its plan fused a
+    * whole-stage codegen stage.
+    */
+  private def interpretedAndCompiled(q: => org.apache.spark.sql.DataFrame)
+      : ((Seq[org.apache.spark.sql.Row], Boolean), (Seq[org.apache.spark.sql.Row], Boolean)) = {
+    def run(df: org.apache.spark.sql.DataFrame) = {
+      val rows = df.collect().toSeq
+      (rows, PlanShape.fused(df))
+    }
+    (graft.plans.Interpreted.when(spark, small = true)(run(q)), run(q))
+  }
+
+  test("interpreted eval ≡ compiled codegen for every graft.expressions class") {
+    import graft.expressions._
+    val r = new scala.util.Random(7)
+    def text(maxLen: Int) = {
+      val alphabet = "abcde ñ 😀éAM:0123456789"
+      (0 until r.nextInt(maxLen)).map(_ => alphabet(r.nextInt(alphabet.length))).mkString
+    }
+    def floats(n: Int) = Seq.fill(n)(r.nextFloat() * 4 - 2)
+    // repartition keeps the projections out of ConvertToLocalRelation, which
+    // would evaluate them in the optimizer in both runs
+    def frame[A: org.apache.spark.sql.Encoder](rows: Seq[A], cols: String*) =
+      spark.createDataset(rows).toDF(cols: _*).repartition(2)
+
+    val texts = frame((Seq.fill(60)(text(40)) ++ Seq("", "école", "José",
+      "10:30 AM", "9PM", "12:00AM", "13:00 PM", "Address: quezon city")).map(Option(_)) :+ None, "s")
+    val tokens = frame(Seq.fill(50)(Seq.fill(r.nextInt(8))(Seq("aa", "bb", "cc", "dd")(r.nextInt(4)))), "t")
+    val alphabet = Seq("p", "q", "r", "s", "t", "u")
+    val sets = frame(Seq.fill(60)((r.shuffle(alphabet).take(r.nextInt(7)).sorted,
+      r.shuffle(alphabet).take(r.nextInt(7)).sorted)), "a", "b")
+    val vecs = frame(Seq.fill(40)((floats(8), floats(8))), "a", "b")
+    val centroids = Seq.tabulate(5)(i => i -> Seq.fill(8)(r.nextDouble() * 4 - 2))
+    val cands = frame(Seq.tabulate(20)(g => (g.toLong, Seq.tabulate(6)(i =>
+      (i.toLong, r.nextDouble(), floats(4))))), "g", "c")
+    val convo = frame(Seq.tabulate(120)(i => (i % 9L,
+      new java.sql.Timestamp(1700000000000L + r.nextInt(100000) * 1000L), i.toLong, text(20))),
+      "g", "ts", "id", "r")
+    val scored = frame(Seq.tabulate(200)(i => (i % 7, r.nextInt(50).toDouble, i.toLong)),
+      "g", "score", "id")
+
+    val cases: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
+      "CharNgrams" -> (() => texts.select(CharNgrams($"s", (length($"s") % 4) + 1))),
+      "CharNgrams.sorted" -> (() => texts.select(CharNgrams.sorted($"s", lit(3)))),
+      "WordShingles" -> (() => tokens.select(WordShingles($"t", lit(2)))),
+      "IntersectCount" -> (() => sets.select(IntersectCount($"a", $"b"))),
+      "JaccardGeq" -> (() => sets.select(JaccardGeq($"a", $"b", 1.0 / 3.0))),
+      "DotProduct" -> (() => vecs.select(DotProduct($"a", $"b"))),
+      "RollingFingerprint" -> (() => tokens.select(RollingFingerprint($"t"))),
+      "SortJoinLastField" -> (() => graft.operators.Convo.sortedStringAgg(
+        convo, "g", Seq($"ts", $"id"), $"r", "\n\n")),
+      "ParseScheduleTime" -> (() => texts.select(ParseScheduleTime($"s"))),
+      "MaxLevRatio" -> (() => texts.select(MaxLevRatio($"s", Seq("quezon city", "makati", "José")))),
+      "NfcNormalize" -> (() => texts.select(NfcNormalize($"s"))),
+      "StripAccents" -> (() => texts.select(StripAccents($"s"))),
+      "DeflateLen" -> (() => texts.select(DeflateLen($"s"))),
+      "BpeCountTokens" -> (() => texts.select(BpeCountTokens($"s"))),
+      "BpeEncodeTokens" -> (() => texts.select(BpeEncodeTokens($"s"))),
+      "BpeEncodeIds" -> (() => texts.select(BpeEncodeIds($"s"))),
+      "NearestCentroid" -> (() => vecs.select(NearestCentroid($"a", centroids))),
+      "NearestCentroidDist" -> (() => vecs.select(NearestCentroidDist($"a", centroids.map(_._2)))),
+      "MmrSelect" -> (() => cands.select($"g", MmrSelect($"c", 3, 0.7, 0.0))),
+      "CdcChunkStarts" -> (() => texts.select(CdcChunkStarts($"s", 3, 8))),
+      "TopKAgg" -> (() => scored.groupBy($"g").agg(TopKAgg.topK(struct($"score", $"id"), 3))))
+
+    // evaluated inside an ObjectHashAggregate (an aggregate function, or a
+    // projection the optimizer folds into the aggregate), which compiles
+    // its projections but fuses no stage
+    val unfusedWhenCompiled = Set("TopKAgg", "SortJoinLastField")
+    for ((name, q) <- cases) {
+      val ((interpreted, fusedI), (compiled, fusedC)) = interpretedAndCompiled(q())
+      assert(!fusedI && fusedC != unfusedWhenCompiled(name),
+        s"$name: fused interpreted=$fusedI compiled=$fusedC")
+      def sorted(rows: Seq[org.apache.spark.sql.Row]) = rows.map(_.toString).sorted
+      assert(interpreted.nonEmpty && sorted(interpreted) == sorted(compiled), name)
+    }
+  }
 }

@@ -47,6 +47,16 @@ class PipelineSpec extends AnyFunSuite {
   lazy val spark = SparkTestBase.spark
   import spark.implicits._
 
+  /** Every route runs interpreted below the input gate, and none may write
+    * a session conf on the way.
+    */
+  override def withFixture(test: NoArgTest) = {
+    val conf = spark.conf.getAll
+    val outcome = super.withFixture(test)
+    assert(spark.conf.getAll == conf, s"${test.name} changed the session conf")
+    outcome
+  }
+
   private def fixtureApi = new FixtureApi(Map(
     "tickets" -> Seq(
       Seq("""{"id":"T1","subject":"s1","tags":["a","b"],"date_created":"2024-01-01 02:00:00"}""",
@@ -601,5 +611,89 @@ class PipelineSpec extends AnyFunSuite {
     assert(merged == Seq(
       ("T1", "orig-num", "cash", "new summary"), // summary updated, asymmetric cols kept
       ("T2", "fresh-num", "gcash", "fresh")))    // insert takes all columns
+  }
+
+  private def tableRows(wh: Warehouse, t: String): Seq[String] = {
+    val df = wh.read(t)
+    df.select(df.columns.sorted.map(col).toIndexedSeq: _*).collect().map(_.toString).toSeq.sorted
+  }
+
+  test("route counts come from the pin or the write: no count job, the rows that landed") {
+    val wh = new Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-counts").toString)
+    val runTs = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
+    var got = Seq.empty[(String, Any)]
+    val sites = jobSitesDuring { got = PipelineWindow.run(spark, wh, PipelineWindow.api("s1"), runTs) }
+    assert(sites.nonEmpty, "no job carried a call site")
+    assert(!sites.exists(_.startsWith("count at Pipelines.scala")),
+      s"a route re-ran its batch to count it: ${sites.filter(_.startsWith("count"))}")
+    val tables = Seq("agents", "tags", "tickets", "messages", "convo_analysis")
+    assert(got.take(5) == tables.map(t => t -> wh.read(t).count()))
+    assert(got.map(_._2) == Seq(1L, 2L, 2L, 3L, 2L, (0L, 2L)))
+    // the users refresh inside the messages route counts on its upsert too
+    val p = new Pipelines(spark, wh, new FixtureApi(Map(
+      "users/C9" -> Seq(Seq("""{"name":"Cy","email":"e@x.ph"}""")))), new LastAddressLlm)
+    var fetched = -1L
+    val userSites = jobSitesDuring {
+      fetched = p.refreshUsers(Seq(("C9", "A1"), ("C7", "A1")).toDF("userid", "agentid"),
+        wh.read("agents"))
+    }
+    assert(!userSites.exists(_.startsWith("count at Pipelines.scala")), userSites)
+    assert(fetched == 1L && wh.read("users").count() == 3L)
+  }
+
+  test("a second identical window leaves merged and overwritten tables unchanged; appends grow by the batch") {
+    val wh = new Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-rerun").toString)
+    val runTs = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
+    val first = PipelineWindow.run(spark, wh, PipelineWindow.api("s1"), runTs)
+    val kept = Seq("agents", "tags", "tickets", "users", "convo_analysis")
+    val before = kept.map(t => t -> tableRows(wh, t)).toMap
+    val appended = Seq("messages", "convo_analysis_history").map(t => t -> wh.read(t).count()).toMap
+    assert(PipelineWindow.run(spark, wh, PipelineWindow.api("s1"), runTs) == first)
+    kept.foreach(t => assert(tableRows(wh, t) == before(t), s"$t changed on an identical rerun"))
+    // append-only by reference parity (§2.8): the rerun lands its batch again
+    assert(wh.read("messages").count() == 2 * appended("messages"))
+    assert(wh.read("convo_analysis_history").count() == 2 * appended("convo_analysis_history"))
+  }
+}
+
+/** A small window over every route, shared by the pipeline and the
+  * interpreted-scope specs.
+  */
+private object PipelineWindow {
+  def api(subject: String) = new FixtureApi(Map(
+    "agents" -> Seq(Seq("""{"id":"A1","name":"Alice"}""")),
+    "tags" -> Seq(Seq("""{"id":"g1","name":"vip"}""", """{"id":"g2","name":"new"}""")),
+    "tickets" -> Seq(Seq(
+      s"""{"id":"T1","subject":"$subject","owner_name":"Owen","agentid":"A1","date_created":"2024-01-01 02:00:00"}""",
+      """{"id":"T2","subject":"s2","owner_name":"Ona","agentid":"A1","date_created":"2024-01-03 02:00:00"}""")),
+    "tickets/T1/messages" -> Seq(Seq(
+      """{"id":"g1","userid":"C7","messages":[{"id":"m1","message":"Address: makati","datecreated":"2024-01-01 10:00:00"}]}""")),
+    "tickets/T2/messages" -> Seq(Seq(
+      """{"id":"g2","userid":"C8","messages":[{"id":"m2","message":"Address: cebu","datecreated":"2024-01-03 10:00:00"},{"id":"m3","message":"thanks","datecreated":"2024-01-03 10:05:00"}]}""")),
+    "users/C7" -> Seq(Seq("""{"name":"Cara","email":"c@x.ph"}""")),
+    "users/C8" -> Seq(Seq("""{"name":" ","email":"d@x.ph"}"""))))
+
+  /** One window over `wh`: every route, each result beside its route. */
+  def run(spark: org.apache.spark.sql.SparkSession, wh: Warehouse, api: LiveAgentApi,
+          runTs: java.sql.Timestamp): Seq[(String, Any)] = {
+    import spark.implicits._
+    val p = new Pipelines(spark, wh, api, new LastAddressLlm)
+    val agents = p.refreshAgents()
+    val tags = p.refreshTags()
+    val tickets = p.processTickets("date_created", "2024-01-01", "2024-02-01", runTs,
+      graft.pipeline.ColumnContracts.TicketsUpdateColumns)
+    val messages = p.processTicketMessages(Seq(TicketRef("T1"), TicketRef("T2")))
+    // the messages table keeps a rerun's duplicates (§2.8); the convo input
+    // is its distinct messages, so an identical rerun analyses the same input
+    val msgs = wh.read("messages").dropDuplicates("message_id").select(col("ticket_id"),
+      col("sender_type"), col("message"), col("message_datecreated").as("datecreated"))
+    val convos = p.processConvos(msgs, Seq("makati", "cebu").toDF("ref_name"), "ref_name",
+      Seq("makati").toDF("svc_name"), "svc_name",
+      graft.pipeline.ColumnContracts.ConvoUpdateColumns, runTs)
+    val metrics = p.metrics(Seq("T1", "T2").toDF("ticket_id"), "convo_analysis", "ticket_id")
+    Seq("agents" -> agents, "tags" -> tags, "tickets" -> tickets, "messages" -> messages,
+      "convo_analysis" -> convos, "metrics" -> metrics)
   }
 }

@@ -1,7 +1,9 @@
 package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.execution.WholeStageCodegenExec
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** One shared local session for the whole test JVM. */
 object SparkTestBase {
@@ -45,4 +47,15 @@ object SparkTestBase {
       jobs.get()
     } finally spark.sparkContext.removeSparkListener(listener)
   }
+
+  /** Janino compiles in this JVM so far, on any thread. */
+  def compiles: Long =
+    org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+}
+
+/** Shape of an executed plan, query stages included. */
+object PlanShape extends AdaptiveSparkPlanHelper {
+  /** Whether the plan `df` ran fused at least one whole-stage codegen stage. */
+  def fused(df: DataFrame): Boolean =
+    find(df.queryExecution.executedPlan)(_.isInstanceOf[WholeStageCodegenExec]).isDefined
 }
