@@ -165,12 +165,6 @@ class Warehouse(spark: SparkSession, root: String) {
     readDir(tableDir(name).resolve(snap))
   }
 
-  /** Data-file bytes of the current snapshot, 0 when the table does not
-    * exist: a size known without a job.
-    */
-  def bytes(name: String): Long =
-    currentSnapshot(name).fold(0L)(snap => parquetBytes(tableDir(name).resolve(snap).toFile))
-
   /** Directory of the CURRENT snapshot — for readers that bring their
     * own schema (e.g. [[FrontStore]] pins the front's schema beside the
     * snapshot so a fresh session's read launches no inference job).

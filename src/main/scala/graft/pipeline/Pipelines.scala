@@ -21,12 +21,13 @@ import graft.sources.{LiveAgentApi, LiveAgentSource, RateLimiter, TicketRef}
   * A route's row count is observed on that one evaluation or on its write
   * ([[counted]]), never taken by a second pass.
   *
-  * Each route runs [[graft.plans.Interpreted]] when its inputs are small:
-  * the bytes of the API pages it fetched, the sizes Catalyst holds for the
-  * caller's frames and the data-file bytes of the warehouse snapshots it
-  * reads ([[gated]]). The choice is made once per route call, before the
-  * route's first Spark execution; a route called inside another keeps the
-  * outer choice.
+  * Each route runs [[graft.plans.Interpreted]] when its batch is small
+  * ([[batchScope]]): the bytes of the API pages it fetched, or the sizes
+  * Catalyst holds for the batch and reference frames a caller passes. The
+  * standing tables a route filters or merges by its batch do not count:
+  * a window is a small delta over a growing warehouse. The choice is made
+  * before the route's first Spark execution; [[processConvos]] makes it a
+  * second time for the work after its extraction, on the extracted batch.
   */
 final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
                       llm: LlmGateway,
@@ -55,18 +56,17 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     (a, obs.get("n_rows").asInstanceOf[Long])
   }
 
-  /** Run a route's `body` interpreted when its inputs are small:
-    * `fetched` bytes of API pages, the caller's `frames`, and the current
-    * snapshots of the warehouse `tables` the route reads.
+  /** Run `body` interpreted when the batch is small: `bytes` of fetched
+    * pages or of a counted batch, plus the known sizes of `frames`.
     */
-  private def gated[T](fetched: Long, frames: Seq[DataFrame], tables: String*)(body: => T): T =
-    Interpreted.when(spark, Interpreted.small(fetched + tables.map(wh.bytes).sum, frames))(body)
+  private def batchScope[T](bytes: Long, frames: DataFrame*)(body: => T): T =
+    Interpreted.when(spark, Interpreted.small(bytes, frames))(body)
 
   /** §3.3 — dimension refresh: fetch + tz-normalize + truncate-overwrite. */
   def refreshAgents(): Long = {
     val rows = LiveAgentSource.fetchPages(api, "agents")
     if (rows.isEmpty) return 0L
-    gated(LiveAgentSource.fetchedBytes(rows), Nil) {
+    batchScope(LiveAgentSource.fetchedBytes(rows)) {
       val raw = LiveAgentSource.json(spark, rows)
       val processed =
         if (raw.columns.contains("last_pswd_change"))
@@ -80,7 +80,7 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
   def refreshTags(): Long = {
     val rows = LiveAgentSource.fetchPages(api, "tags")
     if (rows.isEmpty) return 0L
-    gated(LiveAgentSource.fetchedBytes(rows), Nil) {
+    batchScope(LiveAgentSource.fetchedBytes(rows)) {
       val filled = LiveAgentSource.json(spark, rows).na.fill("").na.fill(0)
       counted(filled, "id")(wh.overwrite("tags", _))._2
     }
@@ -110,7 +110,7 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     val rows = LiveAgentSource.fetchPages(api, "tickets",
       LiveAgentSource.windowFilters(windowField, start, end))
     if (rows.isEmpty) return 0L
-    gated(LiveAgentSource.fetchedBytes(rows), Nil, "tickets")(withPins { pin =>
+    batchScope(LiveAgentSource.fetchedBytes(rows))(withPins { pin =>
       var t = LiveAgentSource.processTickets(LiveAgentSource.json(spark, rows))
         .withColumn("datetime_extracted", lit(runTs).cast("timestamp_ntz"))
       for (c <- Seq("date_created", "date_changed", "date_resolved") if t.columns.contains(c))
@@ -158,10 +158,12 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * `message_id` already landed (left_anti against the standing table —
     * one key-projected scan, no full-table rewrite) and within-batch
     * re-deliveries. Default stays reference-exact.
+    *
+    * Runs in its caller's mode: [[processTicketMessages]] decides it on the
+    * fetched groups. Its own input, a `spark.read.json` frame, has no size
+    * Catalyst knows, so it opens no scope of its own.
     */
-  def processMessages(groups: DataFrame, dedupe: Boolean = false): Long =
-    gated(0L, Seq(groups), Seq("agents", "users") ++ (if (dedupe) Seq("messages") else Nil): _*)(
-      withPins { pin =>
+  def processMessages(groups: DataFrame, dedupe: Boolean = false): Long = withPins { pin =>
     // the reference keeps the inner body's plain name — every other inner
     // field gets the message_ prefix (`core/Ticket.py:170-181`)
     val flat0 = LiveAgentSource.flattenMessageGroups(groups)
@@ -193,7 +195,7 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     // counted on the append, so no second pass re-runs the enrichment and
     // dedupe joins
     counted(out, "message_id")(wh.append("messages", _))._2
-  })
+  }
 
   /** §3.1 middle leg, end-to-end (S5+S6+J3+J4): recent ticket keys →
     * per-key message fetch under the rate limiter → flatten → enrich →
@@ -205,7 +207,7 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
                             maxPagesPerTicket: Int = LiveAgentSource.MaxPages): Long = {
     val rows = LiveAgentSource.fetchTicketMessageRows(api, tickets, limiter, maxPagesPerTicket)
     if (rows.isEmpty) return 0L
-    gated(LiveAgentSource.fetchedBytes(rows), Nil, "tickets", "agents", "users") {
+    batchScope(LiveAgentSource.fetchedBytes(rows)) {
       processMessages(LiveAgentSource.ticketMessageGroups(spark, rows, ticketCache()))
     }
   }
@@ -234,14 +236,11 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * guarded by `maxPointFetches`: a pathological batch (a backfill
     * missing its users preload) fails fast with the size instead of
     * grinding the rate-limited endpoint for days. Returns the number of
-    * newly fetched users.
+    * newly fetched users. Runs in its caller's mode, like
+    * [[processMessages]].
     */
   def refreshUsers(flat: DataFrame, agents: DataFrame,
-                   maxPointFetches: Long = 100000L): Long =
-    gated(0L, Seq(flat, agents), "users")(fetchMissingUsers(flat, agents, maxPointFetches))
-
-  private def fetchMissingUsers(flat: DataFrame, agents: DataFrame,
-                                maxPointFetches: Long): Long = {
+                   maxPointFetches: Long = 100000L): Long = {
     val idCols = Seq("userid", "message_userid", "agentid")
       .filter(flat.columns.contains)
     if (idCols.isEmpty) return 0L
@@ -275,45 +274,53 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * (J5–J8) → history append + upsert (K5+K4). Geocode results join back
     * on the key — the reference's positional concat (J12) is intentionally
     * replaced by a key join (SURVEY.md §7.3).
+    *
+    * Two scopes: the reassembly and extraction read the caller's `messages`
+    * (a window's is the standing table filtered by its run keys) and run
+    * in the mode that frame's known size picks; the geocode, tagging and
+    * writes run on the extracted batch, sized from its counted rows.
     */
   def processConvos(messages: DataFrame, refTable: DataFrame, refNameCol: String,
                     serviceable: DataFrame, svcNameCol: String,
                     updateCols: Seq[String],
                     runTs: java.sql.Timestamp =
-                      java.sql.Timestamp.valueOf("1970-01-01 00:00:00")): Long =
-    gated(0L, Seq(messages, refTable, serviceable), "convo_analysis")(withPins { pin =>
-    val convos = Convo.conversationText(messages)
+                      java.sql.Timestamp.valueOf("1970-01-01 00:00:00")): Long = withPins { pin =>
     // pinned: the geocode branch and the join both read `analysis`, and
     // the gateway answer is not deterministic — one call per conversation,
     // and the history row and the current row carry the same answer
-    val analysis = pin(LlmExtract.extract(
-      convos.select(col("ticket_id").cast("string").as("ticket_id"), col("convo")),
-      "ticket_id", "convo", llm))
-    val geo = GeocodeJoin.bestMatch(
-        analysis.where(col("location") =!= "").select(col("ticket_id"), col("location")),
-        refTable, "location", refNameCol, "ticket_id")
-      .select(col("ticket_id"), col(refNameCol).as("address"),
-        col("score"), col("accepted"))
-    val tagged = GeocodeJoin.tagViable(
-      analysis.join(geo, Seq("ticket_id"), "left"),
-      serviceable, "location", svcNameCol)
-    // post-extraction parity: stamp the run, convert the schedule fields
-    // (F6, extraction_helpers.py:164-216 — schedule_date becomes a
-    // DATETIME combining date + parsed time; schedule_time stays string),
-    // then drop the geocode working columns and anything *metadata*
-    // before load (Extractor.py:293-298).
-    val stamped = tagged
-      .withColumn("date_extracted", lit(runTs).cast("timestamp_ntz"))
-      .withColumn("schedule_date",
-        TimeFns.combineScheduleDateTime(col("schedule_date"), col("schedule_time"))
-          .cast("timestamp_ntz"))
-    val dropCols = Seq("score", "accepted", "input_address", "lat", "lng", "error") ++
-      stamped.columns.filter(_.toLowerCase.contains("metadata"))
-    val (fin, n) = counted(stamped.drop(dropCols: _*), "ticket_id")(pin)
-    wh.append("convo_analysis_history", fin)
-    wh.upsert("convo_analysis", fin, "ticket_id", updateCols)
-    n
-  })
+    val (analysis, extracted) = batchScope(0L, messages) {
+      val convos = Convo.conversationText(messages)
+      counted(LlmExtract.extract(
+        convos.select(col("ticket_id").cast("string").as("ticket_id"), col("convo")),
+        "ticket_id", "convo", llm), "ticket_id")(pin)
+    }
+    batchScope(Interpreted.rowsBytes(analysis, extracted), refTable, serviceable) {
+      val geo = GeocodeJoin.bestMatch(
+          analysis.where(col("location") =!= "").select(col("ticket_id"), col("location")),
+          refTable, "location", refNameCol, "ticket_id")
+        .select(col("ticket_id"), col(refNameCol).as("address"),
+          col("score"), col("accepted"))
+      val tagged = GeocodeJoin.tagViable(
+        analysis.join(geo, Seq("ticket_id"), "left"),
+        serviceable, "location", svcNameCol)
+      // post-extraction parity: stamp the run, convert the schedule fields
+      // (F6, extraction_helpers.py:164-216 — schedule_date becomes a
+      // DATETIME combining date + parsed time; schedule_time stays string),
+      // then drop the geocode working columns and anything *metadata*
+      // before load (Extractor.py:293-298).
+      val stamped = tagged
+        .withColumn("date_extracted", lit(runTs).cast("timestamp_ntz"))
+        .withColumn("schedule_date",
+          TimeFns.combineScheduleDateTime(col("schedule_date"), col("schedule_time"))
+            .cast("timestamp_ntz"))
+      val dropCols = Seq("score", "accepted", "input_address", "lat", "lng", "error") ++
+        stamped.columns.filter(_.toLowerCase.contains("metadata"))
+      val (fin, n) = counted(stamped.drop(dropCols: _*), "ticket_id")(pin)
+      wh.append("convo_analysis_history", fin)
+      wh.upsert("convo_analysis", fin, "ticket_id", updateCols)
+      n
+    }
+  }
 
   /** Metrics job (A1 + A8/J9/J10): new vs existing key counts and grouped
     * totals — `ExtractionLogger.py:95-176`. One pass: each run-key row
@@ -323,7 +330,7 @@ final class Pipelines(spark: SparkSession, wh: Warehouse, api: LiveAgentApi,
     * keys counted as new.
     */
   def metrics(runKeys: DataFrame, table: String, key: String): (Long, Long) =
-    gated(0L, Seq(runKeys), table) {
+    batchScope(0L, runKeys) {
       if (!wh.exists(table)) (runKeys.count(), 0L)
       else {
         val hit = "__standing_hit"

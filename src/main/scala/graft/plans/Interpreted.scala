@@ -37,8 +37,10 @@ object Interpreted {
 
   /** Inputs of at most this many bytes run interpreted: the measured
     * crossover of the convo route, which ran faster interpreted at 31 KB
-    * of messages, as fast at 300-600 KB, and 5-15% slower from 1 MB up
-    * (the numbers are in CHANGES.md).
+    * of messages parquet, as fast at 300-600 KB, and 5-15% slower from
+    * 1 MB up (the numbers are in CHANGES.md). Callers size a batch in the
+    * units they hold without a job: characters of fetched JSON, or
+    * Catalyst's estimate of a frame ([[knownBytes]], [[rowsBytes]]).
     */
   val MaxInputBytes: Long = 512L << 10
 
@@ -55,6 +57,13 @@ object Interpreted {
     val size = df.queryExecution.analyzed.stats.sizeInBytes
     if (size >= SQLConf.get.defaultSizeInBytes) None else Some(size)
   }
+
+  /** Catalyst's size of `rows` rows of `df`'s columns: its per-row
+    * estimate, 8 bytes plus each column type's default size. For a batch
+    * whose rows were counted (an observed pin) over a plan Catalyst cannot
+    * size.
+    */
+  def rowsBytes(df: DataFrame, rows: Long): Long = rows * (8L + df.schema.defaultSize)
 
   /** True when `bytes` plus the known sizes of `frames` is at most
     * [[MaxInputBytes]]; one frame of unknown size makes the inputs large.

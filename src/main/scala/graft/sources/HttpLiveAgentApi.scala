@@ -35,7 +35,7 @@ import java.nio.charset.StandardCharsets.UTF_8
   *    stops the loop here the same way.
   *
   * Throttling: pass ONE [[RateLimiter]] — either here (the reference
-  * puts it inside the client) or at the call site (`paginate`/
+  * puts it inside the client) or at the call site (`fetchPages`/
   * `fetchUsers` take one), not both, or the delays compound.
   *
   * Scale note: this transport is driver-side by design — ingest

@@ -114,36 +114,16 @@ object LiveAgentSource {
     else spark.read.json(rows.toDS())
   }
 
-  /** [[fetchPages]], then [[json]]. */
-  def paginate(spark: SparkSession, api: LiveAgentApi, endpoint: String,
-               filters: Map[String, String] = Map.empty,
-               limiter: Option[RateLimiter] = None,
-               maxPages: Int = MaxPages): DataFrame =
-    json(spark, fetchPages(api, endpoint, filters, limiter, maxPages))
-
   /** S5 — keyed per-ticket message fetch (`core/Ticket.py:75-141`): page
     * `tickets/{id}/messages` for each recent ticket under the rate
-    * limiter, then merge ticket metadata — a cache row wholesale when the
-    * ticket is cached, else the per-ticket fallback args
-    * (`Ticket.py:96-106`). A failed ticket is skipped, not fatal
+    * limiter, one JSON row per message group, the group wrapped with its
+    * ticket key and fallback args. A failed ticket is skipped, not fatal
     * (`Ticket.py:130-132`).
     *
-    * Fetching stays driver-side by design (API-bound, ~150 req/min); the
-    * returned DataFrame of message GROUPS (still nested) is where
-    * distributed processing starts — flatten with
-    * [[flattenMessageGroups]].
-    */
-  def fetchTicketMessages(spark: SparkSession, api: LiveAgentApi,
-                          tickets: Seq[TicketRef],
-                          limiter: Option[RateLimiter] = None,
-                          maxPagesPerTicket: Int = MaxPages,
-                          metadataCache: Option[DataFrame] = None): DataFrame =
-    ticketMessageGroups(spark,
-      fetchTicketMessageRows(api, tickets, limiter, maxPagesPerTicket), metadataCache)
-
-  /** The fetch half of [[fetchTicketMessages]]: one JSON row per message
-    * group, the group wrapped with its ticket key and fallback args.
-    * Driver-side, no Spark work.
+    * Fetching stays driver-side by design (API-bound, ~150 req/min);
+    * [[ticketMessageGroups]] frames the rows, and the returned DataFrame
+    * of message GROUPS (still nested) is where distributed processing
+    * starts — flatten with [[flattenMessageGroups]].
     */
   def fetchTicketMessageRows(api: LiveAgentApi, tickets: Seq[TicketRef],
                              limiter: Option[RateLimiter] = None,
@@ -171,8 +151,9 @@ object LiveAgentSource {
       }.toSeq
     }
 
-  /** The frame half of [[fetchTicketMessages]]: unwrap the fetched rows
-    * and merge the ticket metadata.
+  /** The message groups of [[fetchTicketMessageRows]]' rows, with ticket
+    * metadata merged — a cache row wholesale when the ticket is cached,
+    * else the per-ticket fallback args (`Ticket.py:96-106`).
     */
   def ticketMessageGroups(spark: SparkSession, wrapped: Seq[String],
                           metadataCache: Option[DataFrame] = None): DataFrame = {

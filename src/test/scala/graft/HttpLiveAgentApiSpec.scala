@@ -98,7 +98,7 @@ class HttpLiveAgentApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     seen.synchronized(seen.clear())
     val filters = LiveAgentSource.windowFilters(
       "date_created", "2024-01-01 00:00:00", "2024-01-31 23:59:59")
-    val df = LiveAgentSource.paginate(spark, api, "tickets", filters)
+    val df = LiveAgentSource.json(spark, LiveAgentSource.fetchPages(api, "tickets", filters))
     assert(df.count() == 3)
     assert(df.columns.toSet == Set("id", "subject"))
     val reqs = seen.synchronized(seen.filter(_._1 == "/tickets").toSeq)
@@ -113,7 +113,7 @@ class HttpLiveAgentApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("data-wrapped envelope unwraps like the reference page loop") {
-    val df = LiveAgentSource.paginate(spark, api, "agents")
+    val df = LiveAgentSource.json(spark, LiveAgentSource.fetchPages(api, "agents"))
     assert(df.count() == 2 && df.columns.contains("id"))
   }
 
@@ -135,8 +135,9 @@ class HttpLiveAgentApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("fetchTicketMessages: good ticket lands, 404 ticket skipped") {
-    val df = LiveAgentSource.fetchTicketMessages(spark, api,
-      Seq(TicketRef("t1", ownerName = Some("own")), TicketRef("gone")))
+    val df = LiveAgentSource.ticketMessageGroups(spark,
+      LiveAgentSource.fetchTicketMessageRows(api,
+        Seq(TicketRef("t1", ownerName = Some("own")), TicketRef("gone"))))
     val flat = LiveAgentSource.flattenMessageGroups(df)
     val rows = flat.select("ticket_id", "message_message").collect()
     assert(rows.map(r => (r.getString(0), r.getString(1))).toSeq ==
@@ -146,8 +147,8 @@ class HttpLiveAgentApiSpec extends AnyFunSuite with BeforeAndAfterAll {
   test("fetchTicketMessages: mid-pagination failure drops the WHOLE ticket") {
     // reference behavior (`core/Ticket.py:125-132`): a per-ticket error
     // returns [] for that ticket — never a silently-truncated prefix
-    val df = LiveAgentSource.fetchTicketMessages(spark, api,
-      Seq(TicketRef("flaky"), TicketRef("t1")))
+    val df = LiveAgentSource.ticketMessageGroups(spark,
+      LiveAgentSource.fetchTicketMessageRows(api, Seq(TicketRef("flaky"), TicketRef("t1"))))
     val flat = LiveAgentSource.flattenMessageGroups(df)
     val rows = flat.select("ticket_id", "message_message").collect()
       .map(r => (r.getString(0), r.getString(1))).toSeq
@@ -165,7 +166,7 @@ class HttpLiveAgentApiSpec extends AnyFunSuite with BeforeAndAfterAll {
     val throttled = new HttpLiveAgentApi(base, "k123",
       limiter = Some(new RateLimiter(maxConcurrent = 15, delayMillis = 120)))
     seen.synchronized(seen.clear())
-    LiveAgentSource.paginate(spark, throttled, "tickets")
+    LiveAgentSource.fetchPages(throttled, "tickets")
     val times = seen.synchronized(
       seen.filter(_._1 == "/tickets").map(_._4).toSeq)
     assert(times.size == 3)

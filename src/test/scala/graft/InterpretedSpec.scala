@@ -98,6 +98,8 @@ class InterpretedSpec extends AnyFunSuite {
     assert(Interpreted.knownBytes(json).isEmpty && !Interpreted.small(0L, Seq(json)))
     val local = Seq(1, 2, 3).toDF("a")
     assert(Interpreted.knownBytes(local).exists(_ > 0) && Interpreted.small(0L, Seq(local)))
+    // a counted batch: Catalyst's row width, 8 bytes plus 4 for an int
+    assert(Interpreted.rowsBytes(local, 10L) == 120L)
   }
 
   test("negative: a frame over the gate still fuses and compiles") {
@@ -138,25 +140,36 @@ class InterpretedSpec extends AnyFunSuite {
   /** Plan node names of every SQL execution `body` starts, AQE re-plans
     * included.
     */
-  private def planNodesDuring(body: => Unit): Seq[String] = {
+  private def planNodesDuring(body: => Unit): Seq[String] = plansDuring(body).flatMap(_._2)
+
+  /** Per SQL execution `body` starts, in start order: its description and
+    * the node names of its plans, AQE re-plans included.
+    */
+  private def plansDuring(body: => Unit): Seq[(String, Seq[String])] = {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
     import org.apache.spark.sql.execution.SparkPlanInfo
     import org.apache.spark.sql.execution.ui.{SparkListenerSQLAdaptiveExecutionUpdate,
       SparkListenerSQLExecutionStart}
-    val names = new java.util.concurrent.ConcurrentLinkedQueue[String]()
-    def walk(p: SparkPlanInfo): Unit = { names.add(p.nodeName); p.children.foreach(walk) }
+    val execs = scala.collection.mutable.LinkedHashMap.empty[Long, (String, Seq[String])]
+    def names(p: SparkPlanInfo): Seq[String] = p.nodeName +: p.children.flatMap(names)
+    def add(id: Long, desc: String, p: SparkPlanInfo): Unit = execs.synchronized {
+      val (d, ns) = execs.getOrElse(id, (desc, Nil))
+      execs(id) = (d, ns ++ names(p))
+    }
     val listener = new SparkListener {
       override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
-        case s: SparkListenerSQLExecutionStart => walk(s.sparkPlanInfo)
-        case u: SparkListenerSQLAdaptiveExecutionUpdate => walk(u.sparkPlanInfo)
+        case s: SparkListenerSQLExecutionStart => add(s.executionId, s.description, s.sparkPlanInfo)
+        case u: SparkListenerSQLAdaptiveExecutionUpdate => add(u.executionId, "", u.sparkPlanInfo)
         case _ =>
       }
     }
     spark.sparkContext.addSparkListener(listener)
     try SparkTestBase.jobsDuring(body)
     finally spark.sparkContext.removeSparkListener(listener)
-    scala.jdk.CollectionConverters.CollectionHasAsScala(names).asScala.toSeq
+    execs.synchronized(execs.values.toSeq)
   }
+
+  private def fused(nodes: Seq[String]): Boolean = nodes.exists(_.startsWith("WholeStageCodegen"))
 
   /** Compiles that stay inside a gated route, each cached per shape, so a
     * window compiles nothing once an earlier window has run the shapes:
@@ -179,7 +192,63 @@ class InterpretedSpec extends AnyFunSuite {
     assert(compiles == c0, s"${compiles - c0} compiles in a warm window")
     assert(got == warm && got.map(_._2) == Seq(1L, 2L, 2L, 3L, 2L, (0L, 2L)))
     assert(nodes.nonEmpty)
-    assert(!nodes.exists(_.startsWith("WholeStageCodegen")), nodes.distinct)
+    assert(!fused(nodes), nodes.distinct)
     assert(spark.conf.getAll == conf && localProps == Seq(null, null))
+  }
+
+  test("a window over a standing warehouse past the gate still runs interpreted") {
+    val wh = new Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-interp").toString)
+    val api = PipelineWindow.api("s1")
+    val first = PipelineWindow.run(spark, wh, api, java.sql.Timestamp.valueOf("2024-02-01 00:00:00"))
+    // the tables a window reads whole: users (cache-miss anti-join),
+    // convo_analysis (merge, metrics), grown past the gate by other keys
+    def grow(table: String, key: String): Unit = {
+      val t = wh.read(table)
+      val pad = t.limit(1).crossJoin(spark.range(40000).toDF("__i"))
+        .withColumn(key, sha2(col("__i").cast("string"), 256)).drop("__i")
+      wh.append(table, pad.select(t.columns.map(col): _*))
+      assert(!Interpreted.small(0L, Seq(wh.read(table))), s"$table is under the gate")
+    }
+    grow("users", "id")
+    grow("convo_analysis", "ticket_id")
+    var got = Seq.empty[(String, Any)]
+    val execs = plansDuring {
+      got = PipelineWindow.run(spark, wh, api, java.sql.Timestamp.valueOf("2024-02-02 00:00:00"))
+    }
+    // a rerun fetches no user and appends the same messages again
+    assert(first.map(_._2) == Seq(1L, 2L, 2L, 3L, 2L, (0L, 2L)))
+    assert(got.map(_._2) == Seq(1L, 2L, 2L, 3L, 2L, (0L, 2L)))
+    assert(execs.nonEmpty && !execs.exists(e => fused(e._2)),
+      execs.filter(e => fused(e._2)).map(_._1))
+  }
+
+  test("the convo route compiles its reassembly of a large input, then runs its batch interpreted") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-interp-msgs").toString
+    spark.range(0, 60000, 1, 1).select(
+        concat(lit("T"), (col("id") / 3).cast("long").cast("string")).as("ticket_id"),
+        lit("client").as("sender_type"),
+        concat(lit("Address: makati, order "), sha2(col("id").cast("string"), 256)).as("message"),
+        col("id").as("datecreated"))
+      .write.mode("overwrite").parquet(dir)
+    val all = spark.read.parquet(dir)
+    // a window's input: the standing messages filtered by its run keys
+    val messages = all.join(Seq("T1", "T2").toDF("ticket_id"), Seq("ticket_id"), "left_semi")
+    assert(!Interpreted.small(0L, Seq(messages)))
+    val wh = new Warehouse(spark,
+      java.nio.file.Files.createTempDirectory("graft-interp").toString)
+    val p = new graft.pipeline.Pipelines(spark, wh, PipelineWindow.api("s1"), new LastAddressLlm)
+    var n = 0L
+    val execs = plansDuring {
+      n = p.processConvos(messages, Seq("makati").toDF("ref_name"), "ref_name",
+        Seq("makati").toDF("svc_name"), "svc_name",
+        graft.pipeline.ColumnContracts.ConvoUpdateColumns)
+    }
+    assert(n == 2L)
+    // up to the extraction's pin: the input's mode; after it: the batch's
+    val (extraction, batch) =
+      execs.splitAt(execs.indexWhere(_._1.startsWith("localCheckpoint")) + 1)
+    assert(extraction.exists(e => fused(e._2)), s"the reassembly did not fuse: $extraction")
+    assert(batch.exists(_._2.contains("WriteFiles")) && !batch.exists(e => fused(e._2)), batch)
   }
 }

@@ -66,7 +66,7 @@ class PipelineSpec extends AnyFunSuite {
     "tags"   -> Seq(Seq("""{"id":"g1","name":"vip"}"""))))
 
   test("S1 pagination: loops pages, stops on empty; S4 tags→CSV") {
-    val df = LiveAgentSource.paginate(spark, fixtureApi, "tickets")
+    val df = LiveAgentSource.json(spark, LiveAgentSource.fetchPages(fixtureApi, "tickets"))
     assert(df.count() == 3)
     val processed = LiveAgentSource.processTickets(df)
     val tags = processed.orderBy("id").select("tags").as[String].collect().toSeq
@@ -180,7 +180,7 @@ class PipelineSpec extends AnyFunSuite {
       """{"id":"T1","subject":"s1","tags":["a"],"date_created":"2024-01-01 02:00:00"}""",
       """{"id":"T2","subject":"s2","tags":[],"date_created":"2024-01-02 03:00:00"}"""))))
     val legacy = LiveAgentSource.processTickets(
-      LiveAgentSource.paginate(spark, legacyApi, "tickets"))
+      LiveAgentSource.json(spark, LiveAgentSource.fetchPages(legacyApi, "tickets")))
     wh.overwrite("tickets", legacy)
     assert(!wh.read("tickets").columns.contains(pcol))
 
@@ -255,10 +255,11 @@ class PipelineSpec extends AnyFunSuite {
       "tickets/T3/messages" -> Seq(
         Seq("""{"id":"g3","userid":"U2","messages":[{"mid":"m3","message":"yo"}]}""")))))
     val cache = Seq(("T1", "Cache Owner", "A9")).toDF("ticket_id", "owner_name", "agentid")
-    val groups = LiveAgentSource.fetchTicketMessages(spark, api,
-      Seq(TicketRef("T1", agentId = Some("FBA"), ownerName = Some("FB Owner")),
-          TicketRef("T2", agentId = Some("FBA2"), ownerName = Some("FB2")), // 404 → skipped
-          TicketRef("T3", agentId = Some("A3"), ownerName = None)),
+    val groups = LiveAgentSource.ticketMessageGroups(spark,
+      LiveAgentSource.fetchTicketMessageRows(api,
+        Seq(TicketRef("T1", agentId = Some("FBA"), ownerName = Some("FB Owner")),
+            TicketRef("T2", agentId = Some("FBA2"), ownerName = Some("FB2")), // 404 → skipped
+            TicketRef("T3", agentId = Some("A3"), ownerName = None))),
       metadataCache = Some(cache))
     assert(groups.count() == 3) // 2 T1 groups + 1 T3 group; T2 dropped, batch survives
     // cache hit replaces metadata wholesale (Ticket.py:96-106)
@@ -280,8 +281,9 @@ class PipelineSpec extends AnyFunSuite {
     val api = new FixtureApi(Map(
       "tickets/T9/messages" -> Seq(Seq(
         """{"id":"g1","ticket_id":"SPOOF","owner_name":"SPOOF","userid":"U1","messages":[]}"""))))
-    val groups = LiveAgentSource.fetchTicketMessages(spark, api,
-      Seq(TicketRef("T9", agentId = Some("A1"), ownerName = Some("Real Owner"))))
+    val groups = LiveAgentSource.ticketMessageGroups(spark,
+      LiveAgentSource.fetchTicketMessageRows(api,
+        Seq(TicketRef("T9", agentId = Some("A1"), ownerName = Some("Real Owner")))))
     val row = groups.select("ticket_id", "owner_name").as[(String, String)]
       .collect().head
     assert(row == (("T9", "Real Owner")))
