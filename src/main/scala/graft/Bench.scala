@@ -1,6 +1,9 @@
 package graft
 
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
+import scala.util.control.NonFatal
 
 /** Benchmark main: runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR, materializing full rows through the `noop` sink
@@ -82,6 +85,29 @@ object Bench {
     math.rint((System.nanoTime() - t0) / 1e9 * 1000) / 1000
   }
 
+  /** One run of a bench row: its seconds, or the class and message of the
+    * non-fatal error it threw; and the Janino compiles made while it ran,
+    * on any thread of this JVM.
+    */
+  private[graft] final case class RowRun(name: String, seconds: Option[Double],
+                                         compiles: Long, compileMs: Double,
+                                         error: Option[String])
+
+  /** Run one bench row. A fatal error (out of memory, a linkage error)
+    * escapes; any other error makes the run an error run.
+    */
+  private[graft] def timed(name: String)(body: => Unit): RowRun = {
+    val (c0, ns0) = (CodegenMetrics.METRIC_COMPILATION_TIME.getCount, CodeGenerator.compileTime)
+    val t0 = System.nanoTime()
+    val error =
+      try { body; None }
+      catch { case NonFatal(e) => Some(s"${e.getClass.getName}: ${e.getMessage}") }
+    val seconds = (System.nanoTime() - t0) / 1e9
+    RowRun(name, if (error.isEmpty) Some(seconds) else None,
+      CodegenMetrics.METRIC_COMPILATION_TIME.getCount - c0,
+      (CodeGenerator.compileTime - ns0) / 1e6, error)
+  }
+
   /** 1/5/15-minute load averages (zeros off-Linux — fingerprint only). */
   private def loadavg(): Seq[Double] =
     try new String(java.nio.file.Files.readAllBytes(
@@ -130,7 +156,7 @@ object Bench {
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
 
     // JVM/codegen warmup outside the measured window
-    try run((s, d) => Tables.load(s, d, "nation")) catch { case _: Throwable => }
+    try run((s, d) => Tables.load(s, d, "nation")) catch { case NonFatal(_) => }
 
     // steady-state timing: best of N INTERLEAVED full passes (first touch
     // of a query carries JIT compilation of generated code — observed 2-5x
@@ -198,8 +224,10 @@ object Bench {
     // from a true min-of-N run — r14's official artifact labeled cold
     // pass-1 samples "interleaved" and earned 14 false >2x flags)
     var passesRun = 0
-    var passSamples = Vector.empty[Seq[(String, Double)]]
-    var frontSamples = Seq.empty[(String, Double)]
+    var passRuns = Vector.empty[Seq[RowRun]]
+    var frontRuns = Seq.empty[RowRun]
+    def timings(rs: Seq[RowRun]): Seq[(String, Double)] =
+      rs.collect { case RowRun(n, Some(t), _, _, _) => n -> t }
 
     def line(n: Int, nOk: Int, total: Double, errors: Seq[String],
              queries: Seq[(String, Double)], nShown: Int, stage: String,
@@ -238,17 +266,32 @@ object Bench {
       // per-pass sample arrays (min-of-passes hides which pass carried
       // a reading; the arrays make any artifact self-explaining)
       val frontJson =
-        if (frontSamples.isEmpty) ""
-        else s""","front_build":${jsonOf(frontSamples)}"""
+        if (timings(frontRuns).isEmpty) ""
+        else s""","front_build":${jsonOf(timings(frontRuns))}"""
       val passesJson =
-        if (passSamples.isEmpty) ""
-        else passSamples.map(jsonOf).mkString(""","passes":[""", ",", "]")
+        if (passRuns.isEmpty) ""
+        else passRuns.map(rs => jsonOf(timings(rs))).mkString(""","passes":[""", ",", "]")
+      // per row and run: the Janino compiles it made, and the class and
+      // message of what an error row threw (its last error)
+      def compilesOf(rs: Seq[RowRun]): String = rs.map(r =>
+        "\"" + r.name + "\":{\"compiles\":" + r.compiles + ",\"compile_ms\":" +
+          r3(r.compileMs) + "}").mkString("{", ",", "}")
+      val codegenJson =
+        (if (frontRuns.isEmpty) "" else s""","front_codegen":${compilesOf(frontRuns)}""") +
+        (if (passRuns.isEmpty) ""
+         else passRuns.map(compilesOf).mkString(""","codegen":[""", ",", "]"))
+      val rowErrors = (frontRuns ++ passRuns.flatten)
+        .collect { case RowRun(n, _, _, _, Some(e)) => n -> e }.toMap
+      val errorsJson =
+        if (rowErrors.isEmpty) ""
+        else rowErrors.toSeq.sorted.map { case (n, e) => "\"" + n + "\":" + Verify.jsonString(e) }
+          .mkString(""","row_errors":{""", ",", "}")
       if (only.isEmpty) // a filtered dev run must not clobber the artifact
         java.nio.file.Files.write(
           java.nio.file.Paths.get("bench_full.json"),
           (line(n, results.size, total, errors, results, results.size, stage,
-            isoJson, freshJson + frontJson + passesJson + extraJson +
-              loadJson) + "\n")
+            isoJson, freshJson + frontJson + passesJson + codegenJson +
+              errorsJson + extraJson + loadJson) + "\n")
             .getBytes("UTF-8"))
       val shown =
         if (only.nonEmpty) results else results.filter(r => headline(r._1))
@@ -268,14 +311,8 @@ object Bench {
     // post-front per-head figures were recorded under).
     if (frontSel.nonEmpty) {
       try graft.operators.FrontCache.clear() catch { case _: Throwable => }
-      val fs = frontSel.map { f =>
-        val t0 = System.nanoTime()
-        try { f.build(spark, sfDir)
-              f.name -> Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => f.name -> None }
-      }
-      samples ++= fs
-      frontSamples = fs.collect { case (n, Some(t)) => n -> t }
+      frontRuns = frontSel.map(f => timed(f.name)(f.build(spark, sfDir)))
+      samples ++= frontRuns.map(r => r.name -> r.seconds)
     }
 
     // Passes run one at a time, an artifact after EACH: the r13 driver
@@ -288,13 +325,9 @@ object Bench {
     // samples carry cold JIT and the full front-order effects that
     // min-of-N amortizes away, so downstream comparison must know.
     while (passesRun < runs && (passesRun == 0 || elapsedS < budgetS)) {
-      val ps = selected.map { case (name, fn) =>
-        val t0 = System.nanoTime()
-        try { run(fn); name -> Some((System.nanoTime() - t0) / 1e9) }
-        catch { case _: Throwable => name -> None }
-      }
-      samples ++= ps
-      passSamples :+= ps.collect { case (n, Some(t)) => n -> t }
+      val ps = selected.map { case (name, fn) => timed(name)(run(fn)) }
+      samples ++= ps.map(r => r.name -> r.seconds)
+      passRuns :+= ps
       passesRun += 1
       emit(if (passesRun >= runs) "interleaved" else s"pass$passesRun",
         Seq.empty, Seq.empty)
@@ -378,11 +411,7 @@ object Bench {
       if (only.nonEmpty) Seq.empty // dev-filtered runs are already isolated
       else adjPicked.collect {
         case (name, t, _) if elapsedS < adjDeadline =>
-          val ts = (1 to 2).flatMap { _ =>
-            val t0 = System.nanoTime()
-            try { isolatedRun(name); Some((System.nanoTime() - t0) / 1e9) }
-            catch { case _: Throwable => None }
-          }
+          val ts = (1 to 2).flatMap(_ => timed(name)(isolatedRun(name)).seconds)
           name -> ts.minOption.getOrElse(t)
       }
     val isoSpinAfter =

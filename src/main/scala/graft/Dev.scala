@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
 
 /** Entry smoke + scratch main (the verify skill expects ENTRY_ROWS here).
   * Pass query names as args to print their formatted plans instead.
@@ -102,7 +103,8 @@ object Dev {
       for (q <- args.tail) {
         println(s"===== $q")
         try spark.sql(q).show(20, false)
-        catch { case e: Throwable => println(s"ERR: ${e.getMessage.take(300)}") }
+        catch { case NonFatal(e) =>
+          println(s"ERR: ${e.getClass.getName}: ${e.getMessage}".take(300)) }
       }
     } else {
       val dir = sys.env.getOrElse("DEV_SF", "/root/testdata/sf0.01")

@@ -7,7 +7,13 @@ import graft.queries.{AdvancedQueries, AnalyticsQueries, AnalyticsWave2Queries, 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt. */
 object SparkEntry {
 
-  val all: Seq[QueryDef] =
+  /** Every catalog query. Each one's frame goes through
+    * [[graft.plans.Interpreted.frame]]: a frame over small inputs comes
+    * back on an interpreted child session, so the action its caller starts
+    * compiles nothing. Spark work a query does while it builds its frame
+    * (pins, `localCheckpoint`s) runs on the caller's session.
+    */
+  val all: Seq[QueryDef] = (
     RelationalQueries.defs ++ TextSimQueries.defs ++ DedupVectorQueries.defs ++
       AnalyticsQueries.defs ++ AdvancedQueries.defs ++ BreadthQueries.defs ++
       SemiStructuredQueries.defs ++ BehaviorQueries.defs ++ TpchShapeQueries.defs ++ TpchShapeQueries.wave2 ++
@@ -20,6 +26,7 @@ object SparkEntry {
       EvalStatsQueries.defs ++ SketchGraphQueries.defs ++ MiningDiffQueries.defs ++ BehaviorGeoQueries.defs ++ TemporalPatternQueries.defs ++
       HybridRetrievalQueries.defs ++ CurationWave3Queries.defs ++ DriftQueries.defs ++
       CurationWave4Queries.defs
+  ).map(q => q.copy(fn = (spark, dir) => graft.plans.Interpreted.frame(q.fn(spark, dir))))
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0.
     * Runs the §3.2 convo-analysis lifecycle shape end-to-end: conversation

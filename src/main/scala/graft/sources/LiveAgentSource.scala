@@ -88,19 +88,39 @@ object LiveAgentSource {
 
   /** S1 — generic page loop: the rows of the pages fetched until
     * empty/error/maxPages. Driver-side, no Spark work.
+    * Raises when the source holds more than `maxPages` pages ([[pages]]).
     */
   def fetchPages(api: LiveAgentApi, endpoint: String,
                  filters: Map[String, String] = Map.empty,
                  limiter: Option[RateLimiter] = None,
                  maxPages: Int = MaxPages): Seq[String] =
-    Iterator.from(1).map { page =>
+    pages(api, endpoint, filters, limiter, maxPages)._1
+
+  /** The rows of `endpoint`'s pages up to the first empty or failed page,
+    * and the error that ended them, if any. Page `maxPages + 1` is fetched
+    * only to check the cap: rows there raise, because landing the first
+    * `maxPages` pages alone would drop the rest with no error.
+    */
+  private def pages(api: LiveAgentApi, endpoint: String, filters: Map[String, String],
+                    limiter: Option[RateLimiter],
+                    maxPages: Int): (Seq[String], Option[ApiError]) = {
+    def fetch(page: Int) = {
       limiter.foreach(_.acquire())
       try api.fetchPage(endpoint, page, PageSize, filters)
       finally limiter.foreach(_.release())
-    }.takeWhile {
-      case Right(items) => items.nonEmpty
-      case Left(_)      => false
-    }.take(maxPages).collect { case Right(items) => items }.flatten.toSeq
+    }
+    @scala.annotation.tailrec
+    def loop(page: Int, rows: Vector[String]): (Seq[String], Option[ApiError]) =
+      fetch(page) match {
+        case Left(e) => (rows, Some(e))
+        case Right(items) if items.isEmpty => (rows, None)
+        case Right(_) if page > maxPages => throw new IllegalStateException(
+          s"$endpoint with filters $filters holds more than the cap of $maxPages " +
+            s"pages of $PageSize rows; fetching stopped there would drop the rest")
+        case Right(items) => loop(page + 1, rows ++ items)
+      }
+    loop(1, Vector.empty)
+  }
 
   /** Size of fetched JSON rows, one byte per character: the input size a
     * route gates on ([[graft.plans.Interpreted]]).
@@ -118,7 +138,8 @@ object LiveAgentSource {
     * `tickets/{id}/messages` for each recent ticket under the rate
     * limiter, one JSON row per message group, the group wrapped with its
     * ticket key and fallback args. A failed ticket is skipped, not fatal
-    * (`Ticket.py:130-132`).
+    * (`Ticket.py:130-132`); a ticket with more than `maxPagesPerTicket`
+    * pages raises.
     *
     * Fetching stays driver-side by design (API-bound, ~150 req/min);
     * [[ticketMessageGroups]] frames the rows, and the returned DataFrame
@@ -133,22 +154,15 @@ object LiveAgentSource {
       // reference's per-ticket catch returns [] for the entire ticket
       // (`core/Ticket.py:125-132`), so a fetch error can't leave a
       // silently-truncated message history in the batch
-      var failed = false
-      val pages = Iterator.from(1).map { page =>
-        limiter.foreach(_.acquire())
-        try api.fetchPage(s"tickets/${t.ticketId}/messages", page, PageSize, Map.empty)
-        finally limiter.foreach(_.release())
-      }.takeWhile {
-        case Right(items) => items.nonEmpty
-        case Left(_)      => failed = true; false // skip ticket, keep batch
-      }.take(maxPagesPerTicket).collect { case Right(items) => items }.toSeq
-      val rows = if (failed) Seq.empty else pages.flatten
+      val (fetched, failed) = pages(api, s"tickets/${t.ticketId}/messages", Map.empty,
+        limiter, maxPagesPerTicket)
+      val rows = if (failed.isDefined) Seq.empty else fetched
       // the ticket key + fallback args must survive spark.read.json: wrap
       // each group object under a typed envelope
       rows.map { json =>
         s"""{"ticket_id":${jstr(t.ticketId)},"__fb_agentid":${jstr(t.agentId.orNull)},""" +
           s""""__fb_owner":${jstr(t.ownerName.orNull)},"group":$json}"""
-      }.toSeq
+      }
     }
 
   /** The message groups of [[fetchTicketMessageRows]]' rows, with ticket

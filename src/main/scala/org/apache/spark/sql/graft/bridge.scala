@@ -36,12 +36,34 @@ object Bridge {
     spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
       .sessionState.executePlan(plan).analyzed
 
+  /** A new session over `spark`'s SparkContext and cached data, carrying
+    * a copy of its conf, temp views, functions and execution listeners;
+    * settings on either one no longer reach the other.
+    */
+  def cloneSession(spark: org.apache.spark.sql.SparkSession): org.apache.spark.sql.SparkSession =
+    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession].cloneSession()
+
+  /** The query-execution listeners registered on `spark`. */
+  def listeners(spark: org.apache.spark.sql.SparkSession):
+      Seq[org.apache.spark.sql.util.QueryExecutionListener] =
+    spark.listenerManager.listListeners().toSeq
+
   /** Wrap a logical plan back into a DataFrame. */
   def ofRows(spark: org.apache.spark.sql.SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan):
       org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
+  /** Wrap a logical plan back into a DataFrame whose planning phases are
+    * timed on `tracker`.
+    */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+             plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan,
+             tracker: org.apache.spark.sql.catalyst.QueryPlanningTracker):
+      org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan, tracker)
 
   /** Re-declare the physical layout of a checkpoint-PINNED DataFrame.
     *

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.internal.SQLConf
 import org.scalatest.funsuite.AnyFunSuite
@@ -135,6 +135,105 @@ class InterpretedSpec extends AnyFunSuite {
       holder.join()
     }
     assert(stillScoped)
+  }
+
+  test("a small catalog frame is re-homed: warm, it compiles nothing and runs unfused, and no caller conf is written") {
+    val conf = spark.conf.getAll
+    // a grouped HLL sketch over the events fixture of TablesSpec
+    val dir = java.nio.file.Paths.get(getClass.getResource("/graft/events_nanos").toURI).toString
+    val q = SparkEntry.queries("sketch_hll_grouped")
+    val warm = q(spark, dir)
+    assert(warm.sparkSession ne spark)
+    warm.collect()
+    val df = q(spark, dir)
+    val c0 = compiles
+    val rows = df.collect()
+    assert(compiles == c0, s"${compiles - c0} compiles in a warm re-homed query")
+    assert(rows.nonEmpty && rows.toSeq == warm.collect().toSeq)
+    assert(df.queryExecution.executedPlan.isInstanceOf[
+      org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec])
+    assert(!PlanShape.fused(df))
+    assert(spark.conf.getAll == conf && localProps == Seq(null, null))
+    // a fresh query, whose code no cache holds, compiles nothing either
+    val c1 = compiles
+    assert(Interpreted.frame(fresh(spark.range(0, 5000, 1, 4).toDF())).collect().length == 3333)
+    assert(compiles == c1)
+  }
+
+  test("a re-homed broadcast join compiles no hashed relation; in the scope it does") {
+    val k = lit(System.nanoTime())
+    def join = spark.range(0, 300, 1, 2).select((col("id") * k).as("a"))
+      .join(broadcast(spark.range(0, 50, 1, 1).select((col("id") * k).as("a"))), "a")
+    val c0 = compiles
+    val df = Interpreted.frame(join)
+    assert(df.collect().length == 50)
+    assert(compiles == c0, s"${compiles - c0} compiles in a re-homed broadcast join")
+    assert(PlanShape.find(df.queryExecution.executedPlan)(_.isInstanceOf[
+      org.apache.spark.sql.execution.exchange.BroadcastExchangeExec]).isDefined)
+    // the scope leaves the broadcast thread on the session conf
+    val c1 = compiles
+    assert(Interpreted.when(spark, small = true)(join.collect().length) == 50)
+    assert(compiles > c1)
+  }
+
+  test("the child follows the caller: its runtime conf and its listeners reach the next re-homed frame") {
+    val caller = spark.newSession()
+    val first = Interpreted.frame(caller.range(10).toDF())
+    assert(Interpreted.frame(caller.range(20).toDF()).sparkSession eq first.sparkSession)
+    assert(first.sparkSession.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == "4")
+    caller.conf.set(SQLConf.SHUFFLE_PARTITIONS.key, "3")
+    val next = Interpreted.frame(caller.range(10).toDF())
+    assert(next.sparkSession ne first.sparkSession)
+    assert(next.sparkSession.conf.get(SQLConf.SHUFFLE_PARTITIONS.key) == "3")
+    assert(next.sparkSession.conf.get(Keys(1)) == "false")
+    assert(!caller.conf.getAll.contains(Keys.head) && !caller.conf.getAll.contains(Keys(1)))
+    // a listener the caller registers hears the next re-homed frame's action
+    val heard = new java.util.concurrent.atomic.AtomicInteger
+    caller.listenerManager.register(new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        heard.incrementAndGet()
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    })
+    Interpreted.frame(caller.range(10).toDF()).collect()
+    val deadline = System.nanoTime() + 10L * 1000 * 1000 * 1000
+    while (heard.get == 0 && System.nanoTime() < deadline) Thread.sleep(10)
+    assert(heard.get == 1)
+  }
+
+  test("the children do not keep a dropped caller session alive") {
+    def dropped(): java.lang.ref.WeakReference[SparkSession] = {
+      val caller = spark.newSession()
+      assert(Interpreted.frame(caller.range(10).toDF()).collect().length == 10)
+      new java.lang.ref.WeakReference(caller)
+    }
+    val ref = dropped()
+    val deadline = System.nanoTime() + 20L * 1000 * 1000 * 1000
+    while (ref.get != null && System.nanoTime() < deadline) { System.gc(); Thread.sleep(50) }
+    assert(ref.get == null)
+  }
+
+  test("negative: a frame over the gate, or with a leaf of unknown size, keeps the caller's session and compiles") {
+    val big = spark.range(0, Interpreted.MaxInputBytes / 8 + 1, 1, 4).toDF()
+    val json = spark.read.json(Seq("""{"id":1}""", """{"id":2}""").toDS())
+    for (input <- Seq(big.where(col("id") < 3000), json)) {
+      val df = Interpreted.frame(fresh(input))
+      assert(df.sparkSession eq spark)
+      val c0 = compiles
+      df.collect()
+      assert(compiles > c0 && PlanShape.fused(df))
+    }
+    // a leaf counts inside a subquery too
+    big.createOrReplaceTempView("interp_big")
+    try assert(Interpreted.frame(spark.sql(
+      "SELECT id FROM range(5) WHERE id IN (SELECT id FROM interp_big)")).sparkSession eq spark)
+    finally spark.catalog.dropTempView("interp_big")
+  }
+
+  test("negative: a query run directly on the caller's session still compiles") {
+    val c0 = compiles
+    val df = fresh(spark.range(0, 5000, 1, 4).toDF())
+    assert(df.collect().length == 3333)
+    assert(compiles > c0 && PlanShape.fused(df))
   }
 
   /** Plan node names of every SQL execution `body` starts, AQE re-plans

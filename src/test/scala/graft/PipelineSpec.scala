@@ -73,6 +73,23 @@ class PipelineSpec extends AnyFunSuite {
     assert(tags == Seq("a,b", "", "c"))
   }
 
+  test("S1 pagination: a source past the page cap raises instead of landing the first pages") {
+    val filters = LiveAgentSource.windowFilters("date_changed", "2024-01-01", "2024-01-02")
+    // two pages fit a cap of two; the empty third page ends them
+    assert(LiveAgentSource.fetchPages(fixtureApi, "tickets", filters, maxPages = 2).size == 3)
+    val e = intercept[IllegalStateException](
+      LiveAgentSource.fetchPages(fixtureApi, "tickets", filters, maxPages = 1))
+    assert(e.getMessage.contains("tickets") && e.getMessage.contains("date_changed") &&
+      e.getMessage.contains("cap of 1 pages"), e.getMessage)
+    val messages = new FixtureApi(Map("tickets/T1/messages" -> Seq(
+      Seq("""{"id":"g1"}"""), Seq("""{"id":"g2"}"""))))
+    assert(LiveAgentSource.fetchTicketMessageRows(messages, Seq(TicketRef("T1")),
+      maxPagesPerTicket = 2).size == 2)
+    val m = intercept[IllegalStateException](LiveAgentSource.fetchTicketMessageRows(
+      messages, Seq(TicketRef("T1")), maxPagesPerTicket = 1))
+    assert(m.getMessage.contains("tickets/T1/messages") && m.getMessage.contains("cap of 1 pages"))
+  }
+
   test("S6 flatten: group × inner messages, empty group kept (explode_outer)") {
     val groups = Seq(
       ("g1", "T1", Seq(("m1", "hello"), ("m2", "world"))),
