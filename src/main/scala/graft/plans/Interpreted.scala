@@ -1,7 +1,7 @@
 package graft.plans
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.catalyst.plans.logical.LeafNode
+import org.apache.spark.sql.catalyst.plans.logical.{Generate, Join, LeafNode, LogicalPlan}
 import org.apache.spark.sql.graft.Bridge
 import org.apache.spark.sql.internal.SQLConf
 
@@ -37,8 +37,10 @@ import org.apache.spark.sql.internal.SQLConf
   *    properties.
   *  - [[frame]] re-homes a frame whose action the caller starts (a catalog
   *    query that perfbench, `Bench`, `Verify` or `Dev` materializes) onto a
-  *    child session carrying the two keys. Every execution of a Dataset
-  *    runs on its own session, so the keys reach every place Spark reads
+  *    child session carrying the two keys. It sizes the frame's leaves, and
+  *    keeps compiled a frame whose join pairs generated rows, as the leaves
+  *    do not bound those. Every execution of a Dataset runs on its own
+  *    session, so the keys reach every place Spark reads
   *    them: planning runs under the child's `withActive`, tasks get the
   *    child's conf as local properties (`withSQLConfPropagated`), and AQE
   *    stage and broadcast threads capture the child, so the broadcast
@@ -108,14 +110,30 @@ object Interpreted {
     }
 
   /** True when the leaves of `df`'s analyzed plan, subqueries included,
-    * add up to at most [[MaxInputBytes]] by Catalyst's own stats; one leaf
-    * of unknown size makes the frame large.
+    * add up to at most [[MaxInputBytes]] by Catalyst's own stats, and no
+    * join in it pairs generated rows; one leaf of unknown size makes the
+    * frame large.
     */
   private def smallFrame(df: DataFrame): Boolean = {
-    val sizes = df.queryExecution.analyzed
-      .collectWithSubqueries { case leaf: LeafNode => known(leaf.stats.sizeInBytes) }
-    sizes.forall(_.isDefined) && sizes.flatten.sum <= MaxInputBytes
+    val plan = df.queryExecution.analyzed
+    val sizes = plan.collectWithSubqueries { case leaf: LeafNode => known(leaf.stats.sizeInBytes) }
+    sizes.forall(_.isDefined) && sizes.flatten.sum <= MaxInputBytes && !joinsGenerated(plan)
   }
+
+  /** True when a join in `plan` takes rows a `Generate` made. The leaf
+    * bytes bound the rows a plan evaluates only while no operator makes
+    * more rows than it reads: a generator makes one row per element of an
+    * array it may compute (a grid cell's 3x3 neighborhood), and a join
+    * over those rows evaluates what follows it once per pair. At sf0.1,
+    * `geo_grid_join` explodes 338 KB of parquet into 52,920 candidate pairs
+    * and ran 40-70% slower interpreted; Catalyst's join estimate (the
+    * product of both sides) cannot stand in, as it would also keep
+    * compiled the small joins that gain most.
+    */
+  private def joinsGenerated(plan: LogicalPlan): Boolean =
+    plan.collectWithSubqueries {
+      case j: Join => j.children.exists(_.exists(_.isInstanceOf[Generate]))
+    }.contains(true)
 
   /** `df` re-homed onto its session's interpreted child when
     * [[smallFrame]], else `df` itself. The returned frame has the same

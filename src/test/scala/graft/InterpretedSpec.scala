@@ -229,6 +229,19 @@ class InterpretedSpec extends AnyFunSuite {
     finally spark.catalog.dropTempView("interp_big")
   }
 
+  test("negative: a small frame whose join pairs generated rows keeps the caller's session and compiles") {
+    val cells = spark.range(0, 50, 1, 2)
+      .select(col("id"), explode(sequence(lit(-1L), lit(1L))).as("d"))
+      .select((col("id") + col("d")).as("cell"))
+    assert(Interpreted.frame(cells).sparkSession ne spark)
+    val df = Interpreted.frame(fresh(spark.range(0, 50, 1, 2).toDF())
+      .join(cells, col("x") =!= col("cell")))
+    assert(df.sparkSession eq spark)
+    val c0 = compiles
+    df.collect()
+    assert(compiles > c0 && PlanShape.fused(df))
+  }
+
   test("negative: a query run directly on the caller's session still compiles") {
     val c0 = compiles
     val df = fresh(spark.range(0, 5000, 1, 4).toDF())
