@@ -113,7 +113,13 @@ object Bench {
     try new String(java.nio.file.Files.readAllBytes(
         java.nio.file.Paths.get("/proc/loadavg")), "UTF-8")
       .split("\\s+").take(3).toSeq.map(_.toDouble)
-    catch { case _: Throwable => Seq(0.0, 0.0, 0.0) }
+    catch { case NonFatal(e) => swallowed("loadavg", e); Seq(0.0, 0.0, 0.0) }
+
+  /** A non-fatal error the bench carries on past: `class: message` on
+    * stderr, so the stdout JSON line stays as it is.
+    */
+  private def swallowed(what: String, e: Throwable): Unit =
+    System.err.println(s"[bench] $what failed: ${e.getClass.getName}: ${e.getMessage}")
 
   def main(args: Array[String]): Unit = {
     val benchT0 = System.nanoTime()
@@ -310,7 +316,8 @@ object Bench {
     // head queries read steady state (the contract BASELINE.md's
     // post-front per-head figures were recorded under).
     if (frontSel.nonEmpty) {
-      try graft.operators.FrontCache.clear() catch { case _: Throwable => }
+      try graft.operators.FrontCache.clear()
+      catch { case NonFatal(e) => swallowed("front cache clear", e) }
       frontRuns = frontSel.map(f => timed(f.name)(f.build(spark, sfDir)))
       samples ++= frontRuns.map(r => r.name -> r.seconds)
     }
@@ -475,7 +482,7 @@ object Bench {
           graft.operators.FrontCache.clear()
           spark.catalog.clearCache()
           System.gc()
-        } catch { case _: Throwable => }
+        } catch { case NonFatal(e) => swallowed("cache release", e) }
         val resultNames = results.map(_._1).toSet
         val pool = headline.toSeq.sorted.filter(resultNames)
         val freshN = math.min(pool.size,
@@ -484,14 +491,16 @@ object Bench {
         val cursor =
           try new String(java.nio.file.Files.readAllBytes(cursorPath),
             "UTF-8").trim.toInt
-          catch { case _: Throwable => 0 }
+          catch { case NonFatal(e) => swallowed("fresh cursor read", e); 0 }
         val slice =
           if (pool.isEmpty) Seq.empty
           else (0 until freshN).map(i => pool((cursor + i) % pool.size))
         try java.nio.file.Files.write(cursorPath,
           (((cursor + freshN) % math.max(1, pool.size)).toString + "\n")
             .getBytes("UTF-8"))
-        catch { case _: Throwable => } // read-only cwd: rotation just stalls
+        catch { // read-only cwd: rotation just stalls
+          case NonFatal(e) => swallowed("fresh cursor write", e)
+        }
         val javaBin = System.getProperty("java.home") + "/bin/java"
         val opens = Seq(
           "java.base/java.lang", "java.base/java.lang.invoke",
@@ -555,7 +564,7 @@ object Bench {
     // sbt's own success line.
     val summary = writeArtifact("final", isolated, fresh, isoLoadJson)
     try { spark.sparkContext.setLogLevel("OFF"); spark.stop() }
-    catch { case _: Throwable => }
+    catch { case NonFatal(e) => swallowed("session stop", e) }
     println(summary)
   }
 }

@@ -82,7 +82,7 @@ object FrontCache {
       val s = ref.get()
       val dead =
         s == null || (try s.sparkContext.isStopped catch {
-          case _: Throwable => true
+          case NonFatal(_) => true
         })
       if (dead) {
         owners.remove(id)

@@ -12,9 +12,9 @@ import org.apache.spark.sql.functions._
   *
   * Scale note: ingest parallelism is bounded by the API (150 req/min), not
   * the cluster — fetching stays driver-side by design; the moment data
-  * lands in a DataFrame everything downstream is distributed. A DataSource
-  * V2 TableProvider with page-range input partitions is the documented
-  * extension point if a bulk export endpoint ever allows parallel reads.
+  * lands in a DataFrame everything downstream is distributed. No DataSource
+  * V2 TableProvider ships: page-range input partitions would only pay once
+  * a bulk export endpoint allows parallel reads.
   */
 trait LiveAgentApi extends Serializable {
   /** One page of raw JSON objects (the unwrapped `data` envelope), or

@@ -635,61 +635,6 @@ object Streams {
     }
   }
 
-  // ---- streaming WARC corpus ingestion --------------------------------
-
-  /** The WARC curation head shared VERBATIM by the batch and streaming
-    * ingestion paths — parity by construction, not by twin-maintenance:
-    * extract text responses ([[graft.sources.Warc.responses]] — itself a
-    * stateless narrow flatMap, so it binds to a streaming `binaryFile`
-    * relation unchanged), drop empty/short texts, stamp langid + quality
-    * + word count, and exact-dedup on the text's SHA-256. Batch callers
-    * pass a `spark.read.format("binaryFile")` frame; streaming callers a
-    * `readStream` one (see [[warcCurationStream]]).
-    *
-    * The dedup step is the only stateful operator: batch plans it as a
-    * hash aggregate; streaming keeps one fingerprint per distinct text in
-    * the state store. With `Trigger.AvailableNow` (the incremental-crawl
-    * drain this exists for) state is bounded by the run's distinct count
-    * — an UNBOUNDED 100 TB/day feed should instead window the dedup with
-    * [[dedupStream]]'s watermark eviction, trading cross-horizon dups for
-    * bounded state (the same trade the batch incremental-dedup query
-    * makes).
-    */
-  def warcCuration(files: DataFrame, minWords: Int = 20): DataFrame = {
-    import graft.functions.TextAnalysisFns
-    graft.sources.Warc.responses(files.sparkSession, files)
-      .where(length(col("text")) > 0)
-      .withColumn("lang", TextAnalysisFns.langId(col("text")))
-      .withColumn("quality", TextAnalysisFns.qualityScore(col("text")))
-      .withColumn("n_words", TextAnalysisFns.wordCount(col("text")))
-      .where(col("n_words") >= minWords)
-      .withColumn("content_hash", sha2(col("text"), 256))
-      .dropDuplicates("content_hash")
-  }
-
-  /** Streaming archive ingestion e2e (round-13 ask #4): WARC files
-    * arriving in `dir` drain through the curation head. The 100 TB crawl
-    * arrives INCREMENTALLY — new `.warc.gz` files land on object storage
-    * per crawl segment — and the streaming file source is Spark's
-    * native answer: file discovery is the only streaming machinery, the
-    * per-file parse/extract/score plan is identical to batch (same
-    * operator tree through [[warcCuration]]), and `Trigger.AvailableNow`
-    * drains everything present then checkpoints, so re-runs pick up only
-    * new segments. StreamingV2Spec pins streamed output row-identical to
-    * the batch path over the same fixture set.
-    */
-  def warcCurationStream(spark: SparkSession, dir: String,
-                         minWords: Int = 20): DataFrame =
-    warcCuration(
-      spark.readStream.format("binaryFile")
-        // binaryFile's schema is FIXED by the format; streaming sources
-        // just refuse to infer, so pin it
-        .schema("path STRING, modificationTime TIMESTAMP, " +
-          "length LONG, content BINARY")
-        .option("pathGlobFilter", "*.warc*").load(dir)
-        .select(col("path"), col("content")),
-      minWords)
-
   // ---- streaming MinHash-LSH near-dup detection -----------------------
 
   final case class DocFeed(doc_id: Long, ts: Timestamp, text: String)

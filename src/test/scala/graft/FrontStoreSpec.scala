@@ -1,13 +1,58 @@
 package graft
 
+import java.net.URI
 import java.nio.file.{Files, Paths}
+import java.util.concurrent.atomic.AtomicInteger
 
+import org.apache.hadoop.fs.{FSDataInputStream, Path => HPath, PositionedReadable, RawLocalFileSystem, Seekable}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.operators.FrontStore
+
+/** A RawLocalFileSystem under a PRIVATE scheme, resolvable ONLY through
+  * the session's hadoopConfiguration (`fs.graftcnt.impl`, cache
+  * disabled so every open re-resolves from the conf it is handed) — the
+  * stand-in for a remote scheme such as s3a://. It also counts stream
+  * opens/closes, so a reader can be audited for handle leaks.
+  */
+class CountingLocalFs extends RawLocalFileSystem {
+  override def getScheme: String = "graftcnt"
+  override def getUri: URI = URI.create("graftcnt:///")
+  override def open(f: HPath, bufferSize: Int): FSDataInputStream = {
+    val d = super.open(f, bufferSize)
+    CountingLocalFs.opened.incrementAndGet()
+    new FSDataInputStream(new CountingLocalFs.Tracking(d))
+  }
+}
+
+object CountingLocalFs {
+  val opened = new AtomicInteger
+  val closed = new AtomicInteger
+
+  final class Tracking(d: FSDataInputStream) extends java.io.InputStream
+      with Seekable with PositionedReadable {
+    def read(): Int = d.read()
+    override def read(b: Array[Byte], off: Int, len: Int): Int =
+      d.read(b, off, len)
+    def seek(pos: Long): Unit = d.seek(pos)
+    def getPos: Long = d.getPos
+    def seekToNewSource(targetPos: Long): Boolean = d.seekToNewSource(targetPos)
+    def read(position: Long, buffer: Array[Byte], offset: Int,
+             length: Int): Int = d.read(position, buffer, offset, length)
+    def readFully(position: Long, buffer: Array[Byte], offset: Int,
+                  length: Int): Unit = d.readFully(position, buffer, offset, length)
+    def readFully(position: Long, buffer: Array[Byte]): Unit =
+      d.readFully(position, buffer)
+    private var done = false
+    override def close(): Unit = {
+      if (!done) { done = true; closed.incrementAndGet() }
+      d.close()
+    }
+  }
+}
 
 /** FrontStore laws (round-14 ask #3's "done" criteria, extended by the
   * round-15 asks): a NEW SESSION hits the persisted front with ZERO
@@ -91,8 +136,8 @@ class FrontStoreSpec extends AnyFunSuite {
 
   test("staleness detection works on a conf-registered NON-LOCAL fs scheme corpus") {
     // the corpus lives behind a scheme resolvable ONLY through the
-    // session's hadoopConfiguration (the ArchiveHardeningSpec pattern —
-    // the stand-in for s3a://): fingerprinting must go through the
+    // session's hadoopConfiguration (CountingLocalFs above — the
+    // stand-in for s3a://): fingerprinting must go through the
     // Hadoop FileSystem, not java.nio (which saw a "missing" dir and
     // pinned a constant fingerprint → stale fronts served forever)
     val hc = spark.sparkContext.hadoopConfiguration

@@ -91,31 +91,11 @@ class ReachabilitySpec extends AnyFunSuite {
   /** Unreached today and still open for retirement or wiring-in; only
     * specs reach them. Exact: the list can only shrink.
     */
-  private val Pending: Set[String] = {
-    def v2(names: String*) = names.map("graft.sources.v2." + _)
-    Set(
-      // archive sources
-      "graft.sources.Tar", "graft.sources.Zip",
-      // reference features the pipeline never wired in
-      "graft.operators.GeoFallback", "graft.operators.GeoFallbackResolver",
-      "graft.operators.MockGeoResolver", "graft.operators.HttpGeoResolver",
-      "graft.operators.SchemaInference", "graft.sources.RetryingApi",
-      // the basis of a bucketed upsert, or retired
-      "graft.operators.Bucketing") ++
-    // DSv2 providers, loaded by format name from specs only
-    v2("ArchiveTables", "ArchiveScanMetrics", "ArchiveFilePartition",
-      "WarcTableProvider", "WarcTable", "WarcScanBuilder", "WarcScan",
-      "WarcReaderFactory", "WarcPartitionReader", "EntryArchiveProvider",
-      "TarTableProvider", "ZipTableProvider", "EntryArchiveTable",
-      "EntryArchiveScanBuilder", "EntryArchiveScan", "EntryArchiveReaderFactory",
-      "EntryArchiveReader") ++
-    v2("GraftParquetSinkProvider", "GraftSinkTable", "GraftSinkWriteBuilder",
-      "GraftSinkBatchWrite", "GraftCommitMessage", "GraftSinkWriterFactory",
-      "GraftSinkDataWriter", "InternalRowParquetBuilder") ++
-    v2("LiveAgentTableProvider", "LiveAgentApiRegistry", "LiveAgentTable",
-      "LiveAgentScanBuilder", "LiveAgentScan", "LiveAgentInputPartition",
-      "LiveAgentReaderFactory", "LiveAgentPartitionReader")
-  }
+  private val Pending: Set[String] = Set(
+    // reference features the pipeline never wired in
+    "graft.operators.GeoFallback", "graft.operators.GeoFallbackResolver",
+    "graft.operators.MockGeoResolver", "graft.operators.HttpGeoResolver",
+    "graft.operators.SchemaInference", "graft.sources.RetryingApi")
 
   private lazy val mainGraph = graph(Seq(mainClasses))
 

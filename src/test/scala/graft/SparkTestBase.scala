@@ -14,7 +14,7 @@ object SparkTestBase {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
       .config("spark.ui.enabled", "false")
-      // managed tables (BucketingSpec) go to a scratch dir, not the repo
+      // any managed-table write goes to a scratch dir, not the repo
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh-test").toString)
       .getOrCreate()

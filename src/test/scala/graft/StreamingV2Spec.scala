@@ -435,45 +435,6 @@ class StreamingV2Spec extends AnyFunSuite {
     assert(e.getMessage.contains("watermark"))
   }
 
-  test("streaming WARC ingestion e2e: AvailableNow drain is row-identical to the batch curation path") {
-    def record(uri: String, body: Array[Byte], ct: String): Array[Byte] = {
-      val http = (s"HTTP/1.1 200 OK\r\nContent-Type: $ct\r\n" +
-        s"Content-Length: ${body.length}\r\n\r\n").getBytes("ISO-8859-1") ++ body
-      (s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: <urn:uuid:1>\r\n" +
-        s"WARC-Date: 2026-08-16T00:00:00Z\r\nWARC-Target-URI: $uri\r\n" +
-        "Content-Type: application/http;msgtype=response\r\n" +
-        s"Content-Length: ${http.length}\r\n\r\n").getBytes("ISO-8859-1") ++
-        http ++ "\r\n\r\n".getBytes("ISO-8859-1")
-    }
-    val en = ("<html><body><p>The quick brown fox jumps over the lazy dog " +
-      "and runs far away into the deep quiet woods tonight.</p></body></html>").getBytes("UTF-8")
-    val es = ("<html><body><p>El rápido zorro marrón salta sobre el perro " +
-      "perezoso y corre hacia el bosque oscuro esta noche.</p></body></html>").getBytes("UTF-8")
-    val dir = java.nio.file.Files.createTempDirectory("graft-warc-stream")
-    // duplicate page across two segments + a binary asset: dedup and the
-    // binary drop must both behave identically in batch and stream
-    java.nio.file.Files.write(dir.resolve("seg-0.warc"),
-      record("https://en.example/a", en, "text/html; charset=utf-8") ++
-        record("https://cdn.example/img", Array.fill(64)(9.toByte), "image/png"))
-    java.nio.file.Files.write(dir.resolve("seg-1.warc"),
-      record("https://es.example/b", es, "text/html; charset=utf-8") ++
-        record("https://mirror.example/a-again", en, "text/html; charset=utf-8"))
-    val cols = Seq("content_hash", "lang", "quality", "n_words")
-    val batch = Streams.warcCuration(
-      spark.read.format("binaryFile").load(dir.toString)
-        .select(col("path"), col("content")), minWords = 10)
-      .select(cols.head, cols.tail: _*).collect().map(_.toSeq).toSet
-    assert(batch.size == 2, s"en + es after dedup, got $batch")
-    val q = Streams.warcCurationStream(spark, dir.toString, minWords = 10)
-      .select(cols.head, cols.tail: _*)
-      .writeStream.outputMode("append").format("memory")
-      .queryName("warc_curated").trigger(Trigger.AvailableNow()).start()
-    assert(q.awaitTermination(120000))
-    val streamed = spark.table("warc_curated").collect().map(_.toSeq).toSet
-    assert(streamed == batch,
-      s"missing=${batch -- streamed} extra=${streamed -- batch}")
-  }
-
   test("Trigger.AvailableNow: drains a file source then self-terminates") {
     val dir = java.nio.file.Files.createTempDirectory("graft-avnow").toString
     Seq(
