@@ -1,205 +1,88 @@
 #!/usr/bin/env python3
-"""Compare a Bench run (bench_full.json) against BASELINE.md's standing
-per-query table: prints the standing-subset ratio, total, and every query
-over the given per-query ratio threshold (default 2.0).
+"""Compare graft.Bench runs, parent against change, artifact to artifact.
 
-Usage: compare_bench.py [bench_full.json] [--threshold 2.0]
+Usage: compare_bench.py --parent P.json [P2.json ...] --change C.json [C2.json ...]
+                        [--threshold 1.10]
+
+Each side pools every row's samples over its artifacts (bench_full.json
+files): the per-pass samples under `passes` and the cold front builds
+under `front_build`. A row's figure on a side is the median of its pooled
+samples. The script prints each side's total (the sum of the row medians
+over the rows timed on both sides) and every such row's change/parent
+ratio of medians. It then counts and lists the rows more than `threshold`
+times slower and more than `threshold` times faster, the rows that errored
+on either side (listed in an artifact's `errors`, or run without a single
+sample), and the rows that only one side ran.
 """
+import argparse
 import json
-import re
-import sys
-
-bench_path = sys.argv[1] if len(sys.argv) > 1 and not sys.argv[1].startswith("-") \
-    else "bench_full.json"
-thr = 2.0
-if "--threshold" in sys.argv:
-    i = sys.argv.index("--threshold")
-    if i + 1 >= len(sys.argv):
-        sys.exit("--threshold needs a value")
-    thr = float(sys.argv[i + 1])
-
-with open(bench_path) as f:
-    _doc = json.load(f)
-bench = _doc["queries"]
-fresh = _doc.get("fresh", {})
-
-# protocol accounting (graft.Bench stamps these since r15): a run whose
-# budget truncated the interleaved passes carries cold-JIT single-pass
-# samples — its per-query figures are UPPER BOUNDS, and grading them as
-# standing-baseline regressions produced r14's 14 false >2x flags.
-passes_run = _doc.get("passes_run")
-runs_intended = _doc.get("runs_intended")
-truncated = (passes_run is not None and runs_intended is not None
-             and passes_run < runs_intended)
-if passes_run is not None:
-    note = " TRUNCATED (budget cut the min-of-N protocol)" if truncated else ""
-    print(f"protocol: {passes_run}/{runs_intended} interleaved passes "
-          f"(stage {_doc.get('stage', '?')}){note}")
-elif _doc.get("stage", "").endswith("-only"):
-    truncated = True
-    print(f"protocol: stage {_doc['stage']} — single-pass artifact")
-
-# anchored to TABLE ROWS only (lines starting with '|') so prose mentions
-# never enter the map; later tables override earlier ones, so the newest
-# standing-baseline section wins per query (mirrors graft.Bench's parser)
-baseline = {}
-with open("BASELINE.md") as f:
-    for line in f:
-        if not line.lstrip().startswith("|"):
-            continue
-        for m in re.finditer(r"`([a-z0-9_]+)` ([0-9]+\.[0-9]+)", line):
-            baseline[m.group(1)] = float(m.group(2))
-
-common = sorted(set(bench) & set(baseline))
-missing = sorted(set(baseline) - set(bench))
-b_tot = sum(bench[q] for q in common)
-base_tot = sum(baseline[q] for q in common)
-print(f"standing subset: {len(common)} queries "
-      f"(baseline has {len(baseline)}; missing from bench: {missing})")
-if common and base_tot > 0:
-    print(f"bench {b_tot:.2f} s vs baseline {base_tot:.2f} s -> "
-          f"ratio {b_tot / base_tot:.3f}x")
-else:
-    print("no overlap with the baseline table - nothing to compare")
-
-# box-state fingerprint (written by graft.Bench): loadavg + time for a
-# fixed single-thread CPU work unit, sampled at run start and end. The
-# r12 driver run read ~1.9x the recorded fresh floors across the board
-# purely from box load; this makes that adjudication mechanical — a
-# flagged run's ratios are upper bounds, not plan regressions.
-def _spin_ref(pattern):
-    try:
-        with open("BASELINE.md") as f:
-            m = re.search(pattern, f.read())
-            return float(m.group(1)) if m else None
-    except FileNotFoundError:
-        return None
+import statistics
 
 
-ref = _spin_ref(r"bench spin reference: ([0-9.]+) s")
-mref = _spin_ref(r"bench parallel spin reference: ([0-9.]+) s")
-
-load = _doc.get("load")
-if load:
-    la = (load.get("loadavg_start") or [0.0])[0]
-    le = (load.get("loadavg_end") or [0.0])[0]
-    ss = load.get("spin_start_sec", 0.0)
-    se = load.get("spin_end_sec", 0.0)
-    cpus = float(load.get("cpus", 1))
-    ms = load.get("spin_mt_start_sec", 0.0)
-    me = load.get("spin_mt_end_sec", 0.0)
-    print(f"box fingerprint: loadavg {la:.2f}->{le:.2f} of {cpus:.0f} cpus; "
-          f"spin {ss:.2f}s->{se:.2f}s"
-          + (f" (idle reference {ref:.2f}s)" if ref else "")
-          + (f"; parallel spin {ms:.2f}s->{me:.2f}s" if ms or me else "")
-          + (f" (idle reference {mref:.2f}s)" if mref and (ms or me) else ""))
-    flags = []
-    if ref and max(ss, se) > 1.3 * ref:
-        flags.append(f"spin {max(ss, se):.2f}s > 1.3x idle {ref:.2f}s")
-    # the single-thread spin cannot see lost PARALLEL throughput
-    # (shared-tenant CPU quota): r15 measured every sub-second query ~2x
-    # baseline on a box with a healthy 0.77s spin — an A/B of the prior
-    # round's tree on the same box read identically (box, not tree)
-    if mref and max(ms, me) > 1.3 * mref:
-        flags.append(f"parallel spin {max(ms, me):.2f}s > 1.3x idle "
-                     f"{mref:.2f}s - MULTI-THREAD THROUGHPUT DEGRADED")
-    # START loadavg only: the end reading mostly measures the bench's OWN
-    # local[32] threads and varies with which protocol phase ran last
-    # (a full interleaved pass ends at ~15, a fresh-fork tail near idle),
-    # so it cannot distinguish foreign load. The spin covers the
-    # during-run window: a contended box slows the fixed work unit.
-    if la > 0.25 * cpus:
-        flags.append(f"start loadavg {la:.2f} > 25% of {cpus:.0f} cpus")
-    if flags:
-        print("  HIGH-LOAD RUN - treat every ratio above as an upper "
-              "bound, not a plan regression: " + "; ".join(flags))
-fronts = _doc.get("front_build", {})
-if fronts:
-    fb_base = {q: baseline[q] for q in fronts if q in baseline}
-    tot = sum(fronts.values())
-    if fb_base:
-        fb_ratio = (sum(fronts[q] for q in fb_base)
-                    / sum(fb_base.values()))
-        print(f"front builds (cold): {tot:.2f} s over {len(fronts)} fronts "
-              f"({fb_ratio:.3f}x their baseline rows)")
-    else:
-        print(f"front builds (cold): {tot:.2f} s over {len(fronts)} fronts "
-              f"(no baseline rows yet)")
-
-def report_isolated():
-    """Isolated re-run entries, each tagged with its baseline ratio — and
-    REFUSED (tagged untrustworthy) when the iso_load spin probe shows the
-    box was degraded WHILE the adjudication batch ran: the r15 driver
-    artifact's isolated block read 7.6-8.8x under a 6 s spin and nothing
-    in the artifact said so, so it masqueraded as trustworthy
-    adjudication.
-    """
-    iso = _doc.get("isolated", {})
-    if not iso:
-        return
-    il = _doc.get("iso_load", {})
-    iso_spin = max(il.get("spin_before_sec", 0.0), il.get("spin_after_sec", 0.0))
-    iso_mt = max(il.get("spin_mt_before_sec", 0.0),
-                 il.get("spin_mt_after_sec", 0.0))
-    degraded = []
-    if ref and iso_spin > 1.3 * ref:
-        degraded.append(f"spin {iso_spin:.2f}s > 1.3x idle {ref:.2f}s")
-    if mref and iso_mt > 1.3 * mref:
-        degraded.append(f"parallel spin {iso_mt:.2f}s > 1.3x idle {mref:.2f}s")
-    armed = il.get("armed")
-    cover = (f" ({il['run']}/{armed} armed candidates)"
-             if armed is not None else "")
-    print(f"  isolated re-runs recorded for {len(iso)} readings{cover}:")
-    if degraded:
-        print("    HIGH-LOAD ADJUDICATION - the isolated figures below were "
-              "taken under a degraded box and are REFUSED as adjudication "
-              "evidence (upper bounds only): " + "; ".join(degraded))
-    for q, t in sorted(iso.items()):
-        ba = baseline.get(q)
-        tag = f" ({t / ba:.2f}x baseline {ba:.2f})" if ba else ""
-        print(f"    {q}: {t:.2f}s{tag}")
+def pooled(paths):
+    """(samples per row, rows that errored in any artifact, row names)."""
+    samples, errored, names = {}, set(), set()
+    for path in paths:
+        with open(path) as f:
+            doc = json.load(f)
+        errored.update(doc.get("errors", []))
+        for run in [doc.get("front_build", {})] + doc.get("passes", []):
+            for row, secs in run.items():
+                samples.setdefault(row, []).append(secs)
+        names.update(doc.get("queries", {}))
+    return samples, errored, names | errored | set(samples)
 
 
-if truncated:
-    print(f"per-query regression grading REFUSED: this artifact is a "
-          f"single-pass (budget-truncated) run — every figure is an upper "
-          f"bound carrying cold JIT; re-run with enough budget (or consult "
-          f"its 'isolated' entries) before reading any >{thr}x flag as a "
-          f"plan regression")
-    report_isolated()
-else:
-    over = [(q, bench[q], baseline[q],
-             bench[q] / baseline[q] if baseline[q] > 0 else float("inf"))
-            for q in common if bench[q] > thr * baseline[q]]
-    over.sort(key=lambda r: -r[3])
-    print(f"queries over {thr}x baseline: {len(over)}")
-    for q, b, ba, r in over:
-        print(f"  {q}: {b:.2f} vs {ba:.2f} ({r:.2f}x)")
-    report_isolated()
-new = sorted(set(bench) - set(baseline))
-print(f"beyond-baseline queries timed: {len(new)}")
+def main():
+    ap = argparse.ArgumentParser(description=__doc__.splitlines()[0])
+    ap.add_argument("--parent", nargs="+", required=True, metavar="P.json")
+    ap.add_argument("--change", nargs="+", required=True, metavar="C.json")
+    ap.add_argument("--threshold", type=float, default=1.10)
+    args = ap.parse_args()
+    if args.threshold < 1.0:
+        ap.error("--threshold must be at least 1.0")
 
-# dual protocol: the fresh-JVM isolated floor per headline query (written
-# by graft.Bench into bench_full.json's "fresh" map). Report BOTH ratios
-# vs baseline over the headline overlap, plus the per-query fresh-vs-
-# interleaved spread — a real plan regression moves both protocols; a
-# load/JIT artifact moves only one.
-if fresh:
-    fc = sorted(set(fresh) & set(baseline) & set(bench))
-    if fc:
-        f_tot = sum(fresh[q] for q in fc)
-        i_tot = sum(bench[q] for q in fc)
-        ba_tot = sum(baseline[q] for q in fc)
-        print(f"dual protocol over {len(fc)} headline queries: "
-              f"interleaved {i_tot:.2f} s ({i_tot / ba_tot:.3f}x baseline), "
-              f"fresh-JVM {f_tot:.2f} s ({f_tot / ba_tot:.3f}x baseline)")
-        spread = sorted(((fresh[q] / bench[q] if bench[q] > 0 else float("inf"),
-                          q) for q in fc), reverse=True)
-        worst = [f"{q} {r:.2f}x" for r, q in spread[:3]]
-        print(f"fresh/interleaved spread: median "
-              f"{spread[len(spread) // 2][0]:.2f}x; widest: {', '.join(worst)}")
-        for q in fc:
-            if baseline[q] > 0 and fresh[q] > thr * baseline[q]:
-                print(f"  FRESH over {thr}x: {q}: {fresh[q]:.2f} vs "
-                      f"baseline {baseline[q]:.2f} "
-                      f"(interleaved {bench[q]:.2f})")
+    p_samples, p_err, p_names = pooled(args.parent)
+    c_samples, c_err, c_names = pooled(args.change)
+    p_med = {r: statistics.median(s) for r, s in p_samples.items()}
+    c_med = {r: statistics.median(s) for r, s in c_samples.items()}
+    p_bad = p_err | (p_names - set(p_med))
+    c_bad = c_err | (c_names - set(c_med))
+    common = sorted(set(p_med) & set(c_med))
+
+    p_tot = sum(p_med[r] for r in common)
+    c_tot = sum(c_med[r] for r in common)
+    print(f"parent: {len(args.parent)} artifact(s), {len(p_names)} rows; "
+          f"change: {len(args.change)} artifact(s), {len(c_names)} rows")
+    ratio = f" (ratio {c_tot / p_tot:.3f})" if p_tot > 0 else ""
+    print(f"total over {len(common)} rows timed on both sides: "
+          f"parent {p_tot:.2f} s, change {c_tot:.2f} s{ratio}")
+
+    ratios = {r: c_med[r] / p_med[r] if p_med[r] > 0 else float("inf")
+              for r in common}
+    print("row ratios (change/parent, medians in s):")
+    for r in common:
+        print(f"  {r}: {p_med[r]:.3f} -> {c_med[r]:.3f} ({ratios[r]:.2f})")
+
+    slower = sorted((r for r in common if ratios[r] > args.threshold),
+                    key=lambda r: -ratios[r])
+    faster = sorted((r for r in common if ratios[r] * args.threshold < 1.0),
+                    key=lambda r: ratios[r])
+    for label, rows in ((f"more than {args.threshold}x slower", slower),
+                        (f"more than {args.threshold}x faster", faster)):
+        print(f"rows {label}: {len(rows)}")
+        for r in rows:
+            print(f"  {r}: {p_med[r]:.3f} -> {c_med[r]:.3f} ({ratios[r]:.2f})")
+    errored = sorted(p_bad | c_bad)
+    print(f"rows errored on either side: {len(errored)}")
+    for r in errored:
+        sides = [side for side, bad in (("parent", p_bad), ("change", c_bad)) if r in bad]
+        print(f"  {r} ({', '.join(sides)})")
+    one_side = sorted(p_names ^ c_names)
+    print(f"rows run on one side only: {len(one_side)}")
+    for r in one_side:
+        print(f"  {r} ({'parent' if r in p_names else 'change'})")
+
+
+if __name__ == "__main__":
+    main()

@@ -121,20 +121,6 @@ object FrontCache {
       case _ => ()
     } catch { case NonFatal(_) => () }
 
-  /** Drop this session's entries whose key starts with `keyPrefix` —
-    * the bench's cold-rebuild hook (time a front build in a warm JVM
-    * without discarding every OTHER front).
-    */
-  def invalidate(spark: SparkSession, keyPrefix: String): Unit = {
-    val id = sid(spark)
-    frames.keysIterator
-      .filter(k => k._1 == id && k._2.startsWith(keyPrefix))
-      .foreach(k => frames.remove(k).foreach(release))
-    values.keysIterator
-      .filter(k => k._1 == id && k._2.startsWith(keyPrefix))
-      .foreach(values.remove)
-  }
-
   /** Drop every cached front and release its executor storage. */
   def clear(): Unit = {
     frames.keysIterator.foreach(k => frames.remove(k).foreach(release))

@@ -67,64 +67,36 @@ object CorpusFronts {
       graft.operators.Ann.pqTrain(Tables.load(s, dir, "embeddings"),
         "vec_id", "embedding", m = m, ksub = ksub, iters = 0))
 
-  /** One cold registry build: `build` must leave the front PINNED again
-    * (so an isolated re-run never poisons a later head's timing), and
-    * `keyPrefix` scopes [[FrontCache.invalidate]] to exactly this
-    * front's entries. `deps` names fronts this build DERIVES from (they
-    * must be listed earlier in [[benchFronts]]): a fresh-JVM fork for
-    * this front pre-builds them under their own names so the fork's
-    * reading measures the same derivation-only quantity the interleaved
-    * row does (round-17, the ADVICE adjudication-asymmetry fix — before
-    * the base was first-class, `front_dup_spans`' fork silently carried
-    * the whole shared-base build while its isolated re-run excluded it).
+  /** One cold registry build: `build` leaves the front PINNED, so the
+    * head queries timed after it read steady state.
     */
-  final case class FrontBuild(name: String, keyPrefix: String,
-                              build: (SparkSession, String) => Unit,
-                              deps: Seq[String] = Nil)
+  final case class FrontBuild(name: String,
+                              build: (SparkSession, String) => Unit)
 
-  /** The per-corpus fronts the bench times as FIRST-CLASS entries
-    * (round-14 VERDICT ask #2 / ADVICE #5): the registry moved the
-    * build cost out of every head query's reported figure — correct for
-    * per-head regression tracking, but the builds themselves (the most
+  /** The per-corpus fronts the bench times as FIRST-CLASS entries: the
+    * registry moved the build cost out of every head query's figure —
+    * correct for per-head tracking, but the builds themselves (the most
     * expensive computations in the suite: the prefix-doubling suffix
     * fronts, the graph edge sets, the BM25 sparse leg, ANN training)
-    * then had NO standing figure, so a regression in any of them was
-    * invisible to the adjudicator. `graft.Bench` cold-builds each of
-    * these (FrontCache cleared first) before pass 1 and reports them as
-    * `front_*` rows against BASELINE.md like any query; its >1.5×
-    * self-adjudicator re-runs one by [[FrontCache.invalidate]] +
-    * rebuild, which re-pins the front.
+    * would otherwise have no figure of their own. `graft.Bench`
+    * cold-builds each of these in this order (FrontCache cleared first)
+    * before its first pass and reports them as `front_*` rows.
     *
     * getOrCompute's `localCheckpoint` is eager, so touching each
     * accessor IS the materialized build; the two index trainers are
     * driver-side values whose builds collect bounded samples.
     */
   def benchFronts: Seq[FrontBuild] = Seq(
-    // the shared suffix-label base is FIRST-CLASS (round-17, VERDICT ask
-    // #3 / ADVICE #1): it is built before the three fronts that derive
-    // from it, so each front row measures its own derivation and a
-    // labelBase regression has a standing number of its own — before
-    // this, front_dup_spans (phase-0-first) silently carried the whole
-    // base build and its >1.5x isolated re-run structurally excluded it
-    FrontBuild("front_suffix_base", "suffix-base:",
-      (s, d) => { CurationWave4Queries.suffixBase(s, d); () }),
-    FrontBuild("front_dup_spans", "dup-spans:",
-      (s, d) => { CurationWave4Queries.dupSpans(s, d); () },
-      deps = Seq("front_suffix_base")),
-    FrontBuild("front_decontam_spans", "decontam-spans:",
-      (s, d) => { CurationWave4Queries.decontamSpans(s, d); () },
-      deps = Seq("front_suffix_base")),
-    FrontBuild("front_suffix_ranks", "suffix-ranks:",
-      (s, d) => { CurationWave4Queries.suffixRanksFront(s, d); () },
-      deps = Seq("front_suffix_base")),
-    FrontBuild("front_copurchase", "copurchase-part:",
-      (s, d) => { partCoPurchase(s, d); () }),
-    FrontBuild("front_cs_pairs", "copurchase-cs:",
-      (s, d) => { custSuppPairs(s, d); () }),
-    FrontBuild("front_bm25", "bm25-post:",
-      (s, d) => { RetrievalQueries.bm25ScoresCached(s, d); () }),
-    FrontBuild("front_ivf", "ivf-index:",
-      (s, d) => { ivfIndex(s, d, nlist = 8); () }),
-    FrontBuild("front_pq", "pq-index:",
-      (s, d) => { pqIndex(s, d, m = 4, ksub = 8); () }))
+    // the shared suffix-label base is a row of its own, built before the
+    // three fronts that derive from it: each of their rows measures only
+    // its own derivation, and the base's cost has a figure of its own
+    FrontBuild("front_suffix_base", (s, d) => { CurationWave4Queries.suffixBase(s, d); () }),
+    FrontBuild("front_dup_spans", (s, d) => { CurationWave4Queries.dupSpans(s, d); () }),
+    FrontBuild("front_decontam_spans", (s, d) => { CurationWave4Queries.decontamSpans(s, d); () }),
+    FrontBuild("front_suffix_ranks", (s, d) => { CurationWave4Queries.suffixRanksFront(s, d); () }),
+    FrontBuild("front_copurchase", (s, d) => { partCoPurchase(s, d); () }),
+    FrontBuild("front_cs_pairs", (s, d) => { custSuppPairs(s, d); () }),
+    FrontBuild("front_bm25", (s, d) => { RetrievalQueries.bm25ScoresCached(s, d); () }),
+    FrontBuild("front_ivf", (s, d) => { ivfIndex(s, d, nlist = 8); () }),
+    FrontBuild("front_pq", (s, d) => { pqIndex(s, d, m = 4, ksub = 8); () }))
 }

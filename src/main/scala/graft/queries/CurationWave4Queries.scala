@@ -33,13 +33,12 @@ object CurationWave4Queries {
     * independently; see [[SuffixDedup.LabelBase]]). Session-pinned
     * through [[graft.operators.FrontCache]] under its own key, so the
     * FIRST front build of a session pays it and the other two derive;
-    * the bench's per-front `FrontCache.invalidate` (keyPrefix-scoped)
-    * deliberately leaves it pinned — an isolated front re-run
-    * adjudicates the front's OWN derivation, the same contract as head
-    * queries re-running over a pinned front. The key carries the sf
-    * directory; a persistent [[graft.operators.FrontStore]] never
-    * stores the base — it stores the three derived fronts, which is
-    * strictly smaller and already proven row-stable.
+    * the bench times it as its own `front_suffix_base` row, built before
+    * the three fronts, so each front's row is its OWN derivation. The
+    * key carries the sf directory; a persistent
+    * [[graft.operators.FrontStore]] never stores the base — it stores
+    * the three derived fronts, which is strictly smaller and already
+    * proven row-stable.
     */
   private[graft] def suffixBase(s: org.apache.spark.sql.SparkSession,
                                 dir: String): SuffixDedup.LabelBase =

@@ -623,21 +623,6 @@ class OperatorsSpec extends AnyFunSuite {
     assert(f == r) // bit-identical doubles, not approximate
   }
 
-  // ---- Schema inference --------------------------------------------
-
-  test("schema inference: widening + custom_fields forced nullable") {
-    import org.apache.spark.sql.types._
-    val st = StructType(Seq(
-      StructField("i", IntegerType, nullable = false),
-      StructField("f", FloatType),
-      StructField("custom_fields", StructType(Seq(
-        StructField("code", StringType))), nullable = false)))
-    val norm = SchemaInference.normalizeStruct(st)
-    assert(norm("i").dataType == LongType)
-    assert(norm("f").dataType == DoubleType)
-    assert(norm("custom_fields").nullable)
-  }
-
   // ---- Skew ---------------------------------------------------------
 
   test("salted aggregate ≡ plain aggregate (associative aggs)") {

@@ -95,7 +95,7 @@ class ReachabilitySpec extends AnyFunSuite {
     // reference features the pipeline never wired in
     "graft.operators.GeoFallback", "graft.operators.GeoFallbackResolver",
     "graft.operators.MockGeoResolver", "graft.operators.HttpGeoResolver",
-    "graft.operators.SchemaInference", "graft.sources.RetryingApi")
+    "graft.sources.RetryingApi")
 
   private lazy val mainGraph = graph(Seq(mainClasses))
 
