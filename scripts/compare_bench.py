@@ -10,9 +10,11 @@ under `front_build`. A row's figure on a side is the median of its pooled
 samples. The script prints each side's total (the sum of the row medians
 over the rows timed on both sides) and every such row's change/parent
 ratio of medians. It then counts and lists the rows more than `threshold`
-times slower and more than `threshold` times faster, the rows that errored
-on either side (listed in an artifact's `errors`, or run without a single
-sample), and the rows that only one side ran.
+times slower and more than `threshold` times faster, the rows with fewer
+than two pooled samples on either side (one sample cannot tell a move from
+noise, so these stay out of the slower and faster counts), the rows that
+errored on either side (listed in an artifact's `errors`, or run without a
+single sample), and the rows that only one side ran.
 """
 import argparse
 import json
@@ -64,13 +66,16 @@ def main():
     for r in common:
         print(f"  {r}: {p_med[r]:.3f} -> {c_med[r]:.3f} ({ratios[r]:.2f})")
 
-    slower = sorted((r for r in common if ratios[r] > args.threshold),
+    single = [r for r in common if min(len(p_samples[r]), len(c_samples[r])) < 2]
+    resolved = [r for r in common if r not in single]
+    slower = sorted((r for r in resolved if ratios[r] > args.threshold),
                     key=lambda r: -ratios[r])
-    faster = sorted((r for r in common if ratios[r] * args.threshold < 1.0),
+    faster = sorted((r for r in resolved if ratios[r] * args.threshold < 1.0),
                     key=lambda r: ratios[r])
-    for label, rows in ((f"more than {args.threshold}x slower", slower),
-                        (f"more than {args.threshold}x faster", faster)):
-        print(f"rows {label}: {len(rows)}")
+    for label, rows in ((f"rows more than {args.threshold}x slower", slower),
+                        (f"rows more than {args.threshold}x faster", faster),
+                        ("single-sample rows (unresolved)", single)):
+        print(f"{label}: {len(rows)}")
         for r in rows:
             print(f"  {r}: {p_med[r]:.3f} -> {c_med[r]:.3f} ({ratios[r]:.2f})")
     errored = sorted(p_bad | c_bad)

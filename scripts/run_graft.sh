@@ -5,8 +5,10 @@
 set -euo pipefail
 REPO="$(cd "$(dirname "$0")/.." && pwd)"
 CLASSES="$REPO/target/scala-2.13/classes"
-if [ ! -d "$CLASSES" ]; then
-  echo "error: $CLASSES missing — run 'sbt compile' first" >&2
+# a plain `sbt compile` leaves src/main/resources uncopied, and the BPE
+# tables would then fail in a static initializer deep inside a run
+if [ ! -f "$CLASSES/graft/bpe/merges.txt" ]; then
+  echo "error: $CLASSES/graft/bpe/merges.txt missing — run 'sbt compile Compile/copyResources' first" >&2
   exit 1
 fi
 CP="$CLASSES:/opt/spark/jars/*"
@@ -16,5 +18,4 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net java.nio 
          sun.nio.ch sun.nio.cs sun.security.action sun.util.calendar; do
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
-exec java $OPENS -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
-  -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"
+exec java $OPENS -Xmx${SPARK_DRIVER_MEM:-8g} -cp "$CP" "$@"

@@ -140,20 +140,11 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val benchT0 = System.nanoTime()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "2").toInt
     val only = sys.env.get("SPARK_GRAFT_BENCH_ONLY")
       .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
     val loadStart = loadavg()
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-bench")
 
     def run(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.mode("overwrite").format("noop").save()
@@ -185,7 +176,7 @@ object Bench {
         val load =
           s""","load":{"loadavg_start":[${loadStart.mkString(",")}],""" +
           s""""loadavg_end":[${loadavg().mkString(",")}],""" +
-          s""""elapsed_sec":${r3((System.nanoTime() - benchT0) / 1e9)},"cpus":$cpus}"""
+          s""""elapsed_sec":${r3((System.nanoTime() - benchT0) / 1e9)},"cpus":${Session.cpus}}"""
         java.nio.file.Files.write(java.nio.file.Paths.get("bench_full.json"),
           (lineOf(_ => true, detail(frontRuns, passRuns) + load) + "\n").getBytes("UTF-8"))
       }

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import scala.util.control.NonFatal
 
 /** Entry smoke + scratch main (the verify skill expects ENTRY_ROWS here).
@@ -8,13 +7,7 @@ import scala.util.control.NonFatal
   */
 object Dev {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Session("graft-dev")
     if (args.isEmpty) {
       val e = SparkEntry.entry(spark)
       println(s"ENTRY_ROWS=${e.count()}")

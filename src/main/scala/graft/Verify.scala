@@ -9,22 +9,12 @@ object Verify {
     val (sfDir, outDir) = (args(0), args(1))
     // optional extra args: run only these query names (dev iteration)
     val only = args.drop(2).toSet
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val builder = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
     // SPARK_GRAFT_FRONTS_PATH routes every front through the persistent
     // FrontStore — running the FULL oracle gate with it set proves
     // end-to-end that persisted fronts (and their cross-session reuse)
     // change no query result
-    sys.env.get("SPARK_GRAFT_FRONTS_PATH").filter(_.nonEmpty)
-      .foreach(p => builder.config(
-        graft.operators.FrontStore.PathConf, p))
-    val spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session("graft-verify", confs = sys.env.get("SPARK_GRAFT_FRONTS_PATH")
+      .filter(_.nonEmpty).map(graft.operators.FrontStore.PathConf -> _).toMap)
     new java.io.File(outDir).mkdirs()
     writeResults(spark, sfDir, outDir, SparkEntry.queries.toSeq
       .filter { case (name, _) => only.isEmpty || only(name) })

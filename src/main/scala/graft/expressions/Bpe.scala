@@ -556,19 +556,6 @@ object BpeOps {
   object Encodings {
     import java.util.regex.Pattern.{compile, UNICODE_CHARACTER_CLASS}
 
-    /** r50k/GPT-2 (also p50k modulo specials). */
-    val Gpt2Specials: Map[String, Int] = Map("<|endoftext|>" -> 50256)
-
-    /** cl100k_base (GPT-3.5/4 family). */
-    val Cl100kPattern: java.util.regex.Pattern = compile(
-      "'(?i:[sdmt]|ll|ve|re)|[^\\r\\n\\p{L}\\p{N}]?+\\p{L}+|\\p{N}{1,3}" +
-        "| ?[^\\s\\p{L}\\p{N}]++[\\r\\n]*|\\s*[\\r\\n]|\\s+(?!\\S)|\\s+",
-      UNICODE_CHARACTER_CLASS)
-    val Cl100kSpecials: Map[String, Int] = Map(
-      "<|endoftext|>" -> 100257, "<|fim_prefix|>" -> 100258,
-      "<|fim_middle|>" -> 100259, "<|fim_suffix|>" -> 100260,
-      "<|endofprompt|>" -> 100276)
-
     /** o200k_base (GPT-4o family — the reference's `gpt-4o-mini`
       * encoding, `core/extract/ConvoDataExtract.py:74-82`): word tokens
       * may lead with one non-letter/digit char and absorb a

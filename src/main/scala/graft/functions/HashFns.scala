@@ -27,29 +27,6 @@ object HashFns {
       i => concat(i.cast("string"), lit("#"),
         md5(array_join(slice(sig, i * r + 1, lit(r)), ","))))
 
-  /** 64-bit SimHash over a token array, packed into a signed long.
-    * Bit q of token t is bit (q%4) of hex digit (q/4) of md5(t); the simhash
-    * bit is the sign of the ±1 vote sum over tokens. Empty input → 0L.
-    * Packing avoids long overflow (ANSI-safe): bits 0..62 folded into a
-    * non-negative value, bit 63 mapped to Long.MinValue.
-    */
-  def simhash64(tokens: Column): Column = {
-    val hashes = transform(tokens, t => md5(t)) // one md5 per token, reused by all 64 bits
-    val bits = transform(sequence(lit(0), lit(63)), q => {
-      val hexDigit = ((q - (q % 4)) / 4).cast("int")
-      val bitInNib = q % 4
-      val votes = aggregate(hashes, lit(0), (acc, h) => {
-        val nib = conv(h.substr(hexDigit + 1, lit(1)), 16, 10).cast("int")
-        val bit = floor(nib.cast("double") / pow(lit(2.0), bitInNib.cast("double"))).cast("int") % 2
-        acc + when(bit === 1, lit(1)).otherwise(lit(-1))
-      })
-      when(votes > 0, lit(1L)).otherwise(lit(0L))
-    })
-    val low63 = aggregate(reverse(slice(bits, 1, 63)), lit(0L), (acc, b) => acc * 2L + b)
-    val sign  = element_at(bits, 64)
-    low63 + when(sign === 1L, lit(Long.MinValue)).otherwise(lit(0L))
-  }
-
   /** Hamming distance between two simhash longs. */
   def hammingDistance(a: Column, b: Column): Column =
     bit_count(a.bitwiseXOR(b))

@@ -97,13 +97,6 @@ object TextAnalysisFns {
         size(toks).cast("double"))
   }
 
-  def meanWordLen(text: Column): Column = {
-    val toks = tokens(text)
-    when(size(toks) === 0, lit(0.0))
-      .otherwise(aggregate(toks, lit(0L), (acc, t) => acc + length(t)).cast("double") /
-        size(toks).cast("double"))
-  }
-
   /** Composite quality score in [0,1]: rewards reasonable length and
     * stopword presence, penalizes punctuation soup. Deterministic rational
     * arithmetic (all terms are exact ratios or clamps).

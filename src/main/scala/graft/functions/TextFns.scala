@@ -62,11 +62,4 @@ object TextFns {
   val UnknownName = "Unknown Name"
   def nameCoalesce(name: Column, email: Column): Column =
     coalesce(nullif(trim(name), lit("")), nullif(trim(email), lit("")), lit(UnknownName))
-
-  /** F11 — fill missing: "" for strings, 0 for numerics (applied via
-    * DataFrame.na in callers; this is the single-column form).
-    * Reference: `utils/df_utils.py:9-15`.
-    */
-  def fillStr(c: Column): Column = coalesce(c, lit(""))
-  def fillNum(c: Column): Column = coalesce(c, lit(0))
 }

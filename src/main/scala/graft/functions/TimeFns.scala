@@ -64,8 +64,4 @@ object TimeFns {
       .otherwise(date_trunc("day", d) +
         make_dt_interval(lit(0), lit(0), lit(0), secs.cast("double")))
   }
-
-  /** F3 — literal extraction timestamp column (run time passed in). */
-  def extractionTimestamp(runTs: java.sql.Timestamp): Column =
-    lit(runTs)
 }

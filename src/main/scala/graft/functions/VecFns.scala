@@ -38,13 +38,6 @@ object VecFns {
     when(na === 0.0 || nb === 0.0, lit(0.0)).otherwise(d / (na * nb))
   }
 
-  /** Euclidean (L2) distance. */
-  def l2Distance(a: Column, b: Column): Column =
-    sqrt(fsum(zip_with(a, b, (x, y) => {
-      val dv = x.cast("double") - y.cast("double")
-      dv * dv
-    })))
-
   /** Random-hyperplane LSH bucket id: sign bits of projections onto the
     * given (deterministically pre-generated) hyperplanes, packed to a long.
     * planes(i) is one hyperplane as a literal array<double> column.

@@ -175,7 +175,4 @@ final class HttpLlmGateway(
       promptTokens = usage.path("prompt_tokens").asLong(0L),
       completionTokens = usage.path("completion_tokens").asLong(0L))
   }
-
-  /** `get_available_models` (`LLMGateway.py:138-140`). */
-  def availableModels: Seq[String] = models
 }

@@ -58,13 +58,4 @@ object Upsert {
     }
     joined.select(outCols.map(outCol): _*)
   }
-
-  /** K5 — history-append + merge: append staging rows to a history table
-    * first, then merge (reference: `extractor_bq_helpers.py:83-108`).
-    */
-  def mergeWithHistory(target: DataFrame, staging: DataFrame, key: String,
-                       updateCols: Seq[String]): (DataFrame, DataFrame) = {
-    val history = staging
-    (history, merge(target, staging, key, updateCols))
-  }
 }

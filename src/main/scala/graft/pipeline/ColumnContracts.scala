@@ -40,10 +40,4 @@ object ColumnContracts {
     "clarity_rating", "resolution_rating", "sentiment_rating", "location",
     "schedule_date", "schedule_time", "car", "inspection", "quotation",
     "tokens", "date_extracted", "address", "is_serviceable", "model")
-
-  val ConvoAllColumns: Seq[String] = "ticket_id" +: ConvoUpdateColumns
-
-  val ConvoKey = "ticket_id"
-  val TicketsKey = "id"
-  val UsersKey = "id"
 }

@@ -6,6 +6,7 @@ import java.time.Instant
 import com.fasterxml.jackson.databind.ObjectMapper
 import com.fasterxml.jackson.databind.node.{ArrayNode, ObjectNode}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
+import scala.util.control.NonFatal
 import graft.operators.Warehouse
 
 /** The reference's HTTP service, wire-level (`api/app.py:45-58`): the
@@ -77,13 +78,16 @@ final class HttpServing(
         case _ => detail(ex, 404, "Not Found")
       }
     } catch {
-      case e: Throwable => detail(ex, 500, String.valueOf(e.getMessage))
+      case NonFatal(e) => detail(ex, 500, String.valueOf(e.getMessage))
     } finally ex.close()
   }
 
   /** Middleware parity (middleware.py:29-43): tracked routes transition
     * in_progress → completed/failed around the handler; failures surface
-    * as 500 with the error detail AND count toward total_errors.
+    * as 500 with the error detail AND count toward total_errors. A fatal
+    * error (out of memory, a linkage error) marks the route failed, then
+    * escapes: the exchange closes without a response, and the pool
+    * replaces the thread it ended.
     */
   private def tracked(ex: HttpExchange, path: String)(body: () => ObjectNode): Unit = {
     tracker.startRoute(path)
@@ -92,9 +96,12 @@ final class HttpServing(
       tracker.completeRoute(path)
       respond(ex, 200, out.toString)
     } catch {
-      case e: Throwable =>
+      case NonFatal(e) =>
         tracker.failRoute(path, e)
         detail(ex, 500, String.valueOf(e.getMessage))
+      case e: Throwable =>
+        tracker.failRoute(path, e)
+        throw e
     }
   }
 

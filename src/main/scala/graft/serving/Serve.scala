@@ -36,6 +36,12 @@ import graft.sources.{FixtureApi, HttpLiveAgentApi, LiveAgentApi, RateLimiter, T
   *  - `GRAFT_SVC_CSV` — serviceable-names list, same format.
   *  - `GRAFT_INITIAL_DATE` — initial-run default start date
   *    (`resolve_extraction_date`'s default, yyyy-MM-dd).
+  *  - `GRAFT_SPARK_MASTER` — Spark master. ABSENT → `local[cores]`.
+  *
+  * The session comes from [[graft.Session]], as every engine main's does:
+  * its cores (`SPARK_GRAFT_CPUS`, default the available processors), its
+  * shuffle partitions (the cores) and the [[graft.plans.GraftExtensions]]
+  * that `processConvos` plans through.
   *
   * The process stays up until SIGTERM (HttpServing's daemon threads are
   * held by a main-thread join), like uvicorn.
@@ -141,17 +147,7 @@ object Serve {
   def main(args: Array[String]): Unit = {
     val port = args.headOption.map(_.toInt)
       .orElse(sys.env.get("GRAFT_SERVE_PORT").map(_.toInt)).getOrElse(8000)
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("GRAFT_SPARK_MASTER", "local[*]"))
-      .appName("graft-serve")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("GRAFT_SHUFFLE_PARTITIONS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      // processConvos plans through TopKPerProbe, which these register
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-serve", master = sys.env.get("GRAFT_SPARK_MASTER"))
     val stack = build(spark, sys.env)
     val bound = stack.serving.start(port)
     println(s"graft serving listening on http://0.0.0.0:$bound " +

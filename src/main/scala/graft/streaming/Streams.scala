@@ -374,7 +374,7 @@ object Streams {
   /** [[runningUserTotals]] with a state TTL — the mechanism that makes
     * keyed LIFETIME state deployable on an unbounded key space: without
     * it, per-user state rows grow with cumulative distinct users forever
-    * (the StreamStateExhibit contrast line); with a TTL, a user idle
+    * (PLANS.md's state-growth measurement); with a TTL, a user idle
     * longer than `ttlMs` is evicted and restarts from zero on return.
     * State TTL is processing-time-based in Spark, so the operator runs in
     * TimeMode.ProcessingTime.
@@ -420,17 +420,6 @@ object Streams {
       true
     }
   }
-
-  /** upsertSink with batch-replay protection via [[idempotentBatch]]. */
-  def idempotentUpsertSink(stream: DataFrame, wh: graft.operators.Warehouse,
-                           table: String, key: String, updateCols: Seq[String]) =
-    stream.writeStream.outputMode("update").foreachBatch {
-      (batch: Dataset[org.apache.spark.sql.Row], batchId: Long) =>
-        idempotentBatch(wh, table)(batchId) {
-          wh.upsert(table, batch.toDF(), key, updateCols)
-        }
-        ()
-    }
 
   /** [[upsertSink]]'s partition-scoped form: each micro-batch MERGEs
     * through `Warehouse.upsertPartitioned`, so the target join reads

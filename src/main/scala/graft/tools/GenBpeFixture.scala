@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.expressions.BpeOps
 
@@ -42,12 +41,7 @@ object GenBpeFixture {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-gen-bpe-fixture")
     val texts = graft.Tables.load(spark, sfDir, "documents")
       .select(col("text")).collect().iterator.map(_.getString(0))
     val out = Paths.get("src/main/resources/graft/bpe/o200k_fixture.tiktoken")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Regenerates the committed oracle fixtures that pin values DuckDB cannot
@@ -22,13 +21,7 @@ object GenFixtures {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.01")
     val sfName = sfDir.stripSuffix("/").split('/').last
     val outFile = Paths.get("fixtures", s"compress_ratio_$sfName.parquet")
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-gen-fixtures")
     val tmp = Files.createTempDirectory("graft-fixture").toString
     // the very same expression the gated query runs — bit-identical
     // values. text_md5 rides along so the oracle's join can REQUIRE the

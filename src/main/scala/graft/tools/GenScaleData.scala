@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Scales the driver-generated testdata up by an integer factor (default
@@ -36,13 +36,7 @@ object GenScaleData {
     val dest = args.lift(1).getOrElse("target/sf1.0")
     val factor = args.lift(2).map(_.toInt).getOrElse(10)
     require(factor >= 1, "factor must be >= 1")
-    val spark = SparkSession.builder()
-      .master(s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.Session("graft-gen-scale-data")
 
     def load(name: String) = graft.Tables.load(spark, src, name)
     def keyOffset(df: DataFrame, keyCol: String): Long =

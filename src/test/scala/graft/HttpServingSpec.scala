@@ -46,8 +46,10 @@ class HttpServingSpec extends AnyFunSuite {
       """{"id":"g2","userid":"A1","messages":[{"mid":"m2","message":"noted"}]}""")),
     "users/C7" -> Seq(Seq("""{"name":"Cara","email":"c@x.ph"}"""))))
 
-  /** A serving stack over one warehouse; deterministic tracker clock. */
-  private def stack(failAgents: Boolean = false) = {
+  /** A serving stack over one warehouse; deterministic tracker clock.
+    * `agentsError`, when given, is what the agents action throws.
+    */
+  private def stack(agentsError: Option[Throwable] = None) = {
     val dir = java.nio.file.Files.createTempDirectory("graft-http").toString
     val wh = new Warehouse(spark, dir)
     val p = new Pipelines(spark, wh, fixtureApi, new MockLlmGateway,
@@ -57,8 +59,7 @@ class HttpServingSpec extends AnyFunSuite {
     val tracker = new RuntimeTracker(clock)
     val runTs = java.sql.Timestamp.valueOf("2024-02-01 00:00:00")
     val actions = HttpServing.Actions(
-      processAgents = () =>
-        if (failAgents) sys.error("liveagent unreachable") else p.refreshAgents(),
+      processAgents = () => agentsError.fold(p.refreshAgents())(e => throw e),
       processTags = () => p.refreshTags(),
       processTicketsAndMessages = (isInitial, date) => {
         val (start, field) = HttpServing.resolveExtractionDate(isInitial, date,
@@ -162,7 +163,7 @@ class HttpServingSpec extends AnyFunSuite {
   }
 
   test("middleware failure path: 500 detail, failed route, error counted, app stays running") {
-    val (_, tracker, serving) = stack(failAgents = true)
+    val (_, tracker, serving) = stack(Some(new RuntimeException("liveagent unreachable")))
     val port = serving.start()
     try {
       val (s, b) = call(port, "POST", "/extract/process-agents")
@@ -176,6 +177,25 @@ class HttpServingSpec extends AnyFunSuite {
       assert(r0.get("status").asText() == "failed"
         && r0.get("error_message").asText().contains("unreachable")
         && r0.get("error_details").get("type").asText().nonEmpty)
+    } finally serving.stop()
+  }
+
+  test("negative: a fatal error in a route escapes, no 500 envelope, route failed, server still up") {
+    val (_, _, serving) = stack(Some(new StackOverflowError("boom")))
+    val port = serving.start()
+    try {
+      // the exchange closes without a response: the client sees an I/O
+      // error, or at least no envelope carrying the error's message
+      scala.util.Try(call(port, "POST", "/extract/process-agents")).foreach { case (s, b) =>
+        assert(s != 500 && !b.contains("boom"), s"fatal error answered as $s: $b")
+      }
+      val (ls, lb) = call(port, "GET", "/logs")
+      val r0 = json(lb).get("runtime_details").get("routes_execution").get(0)
+      assert(ls == 200 && r0.get("route").asText() == "/extract/process-agents"
+        && r0.get("status").asText() == "failed", lb)
+      // the fixed pool replaced the thread the error ended
+      val (hs, hb) = call(port, "GET", "/health")
+      assert(hs == 200 && json(hb).get("status").asText() == "healthy")
     } finally serving.stop()
   }
 

@@ -70,8 +70,6 @@ class ReachabilitySpec extends AnyFunSuite {
       "graft.tools.GenBpeFixture" -> generator,
       "graft.tools.GenScaleRankFile" -> generator,
       "graft.tools.GenScaleData" -> generator,
-      "graft.tools.IncrementalFrontExhibit" -> "exhibit main",
-      "graft.tools.StreamStateExhibit" -> "exhibit main",
       "graft.plans.GraftExtensions" -> "loaded by name through spark.sql.extensions",
       "graft.operators.Convo" -> perfbench,
       "graft.operators.GeocodeJoin" -> perfbench,

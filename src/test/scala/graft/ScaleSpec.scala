@@ -53,7 +53,6 @@ class ScaleSpec extends AnyFunSuite {
   private def withSkewConfigs[T](body: => T): T = {
     val conf = spark.conf
     val saved = Seq(
-      "spark.sql.adaptive.enabled" -> conf.getOption("spark.sql.adaptive.enabled"),
       "spark.sql.adaptive.skewJoin.enabled" -> conf.getOption("spark.sql.adaptive.skewJoin.enabled"),
       "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionFactor"),
       "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> conf.getOption("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes"),
@@ -61,7 +60,6 @@ class ScaleSpec extends AnyFunSuite {
       "spark.sql.autoBroadcastJoinThreshold" -> conf.getOption("spark.sql.autoBroadcastJoinThreshold"),
       "spark.sql.adaptive.autoBroadcastJoinThreshold" -> conf.getOption("spark.sql.adaptive.autoBroadcastJoinThreshold"))
     try {
-      conf.set("spark.sql.adaptive.enabled", "true")
       conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
       // local-scale thresholds so a ~MB hot partition counts as skewed
       conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")

@@ -7,20 +7,11 @@ import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
 
 /** One shared local session for the whole test JVM. */
 object SparkTestBase {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder().master("local[4]")
-      .appName("graft-tests")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      // any managed-table write goes to a scratch dir, not the repo
-      .config("spark.sql.warehouse.dir",
-        java.nio.file.Files.createTempDirectory("graft-wh-test").toString)
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // 4 cores whatever the box: specs pin partition counts; any
+  // managed-table write goes to a scratch dir, not the repo
+  lazy val spark: SparkSession = Session("graft-tests", cores = 4,
+    confs = Map("spark.sql.warehouse.dir" ->
+      java.nio.file.Files.createTempDirectory("graft-wh-test").toString))
 
   /** Jobs launched while `body` runs. A sentinel RDD count (exactly one
     * job) flushes the listener bus: events arrive in order, so once the
